@@ -291,6 +291,12 @@ def main() -> None:
     samples_sec: dict[str, list[float]] = {}
 
     def _time_once(fn) -> "tuple[float, int]":
+        # Clean cache state before every sample (as perfbench's
+        # Harness.clean): a query must not be timed from the cached plans
+        # or persisted RDDs its previous sample left behind.
+        spark.catalog.clearCache()
+        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            rdd.unpersist(True)
         t0 = time.perf_counter()
         n = fn(spark, sf_dir).count()  # forces full execution
         return time.perf_counter() - t0, n

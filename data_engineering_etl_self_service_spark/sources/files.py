@@ -16,25 +16,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampNTZType
+
+from ..catalog import read_parquet_cached
 
 
 def read_parquet(
     spark: SparkSession, path: str, normalize_ntz: bool = True
 ) -> DataFrame:
-    # Accept INT64 TIMESTAMP(NANOS) parquet (Spark rejects it by default);
-    # nanos arrive as long — see catalog.load_table for the conversion idiom.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    # INT64 TIMESTAMP(NANOS) arrives as long nanos and the schema comes
+    # from the catalog's per-application cache — see catalog.load_table.
+    df, schema = read_parquet_cached(spark, path)
     if normalize_ntz:
         # µs parquet written with isAdjustedToUTC=false reads back as
         # TIMESTAMP_NTZ, which time functions (unix_micros, watermarks)
         # reject. The engine pins the session zone to UTC, so casting
         # re-labels the same instant as TIMESTAMP without shifting it —
         # ingested tables behave uniformly regardless of writer quirks.
-        for name, dtype in df.dtypes:
-            if dtype == "timestamp_ntz":
-                df = df.withColumn(name, F.col(name).cast("timestamp"))
+        for f in schema.fields:
+            if isinstance(f.dataType, TimestampNTZType):
+                df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 
