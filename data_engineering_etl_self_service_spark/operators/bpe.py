@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..runtime import truncate_lineage
+from ..runtime import collect_if_small, truncate_lineage
 
 #: fold-accumulator symbol delimiter: ASCII unit separator. Words
 #: containing it are excluded from training (see module docstring).
@@ -52,32 +52,6 @@ DELIM = "\x1f"
 #: components-loop failure class, linear-not-exponential here).
 _FOLD_CKPT_EVERY = 12
 
-#: Driver-tier budget (opt r12): when the (word, count) TYPE table has
-#: at most this many rows, the merge rounds run as the classic
-#: in-memory BPE/WordPiece loop on the driver — identical integer
-#: arithmetic, identical tie-breaks, identical greedy fold, so the
-#: rules are bit-for-bit the distributed loop's (pinned by
-#: tests/test_bpe.py both ways and by the DuckDB oracles). The type
-#: table is the vocabulary, not the corpus: 64 Ki (word, count) rows is
-#: the same bounded-driver-artifact class as k-means' centroids or
-#: pagerank's n_nodes, and each distributed round costs a full Spark
-#: job (~0.3 s of pure scheduling at ANY data size below cache scale),
-#: so below the budget the driver loop is strictly faster at every
-#: scale. Above it, the distributed loop runs exactly as before.
-#: Runtime-settable (0 disables the tier):
-DRIVER_VOCAB_CONF = "spark.data_engineering_etl.bpe.driver_vocab_rows"
-_DRIVER_VOCAB_DEFAULT = 65536
-
-
-def _driver_vocab_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(DRIVER_VOCAB_CONF, str(_DRIVER_VOCAB_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return _DRIVER_VOCAB_DEFAULT
-
-
 #: Byte ceiling for the collected type table (opt r13 — VERDICT r12 #6):
 #: the ROW budget alone would let 64 Ki pathological multi-KB "words"
 #: collect gigabytes to the driver; past this many total characters the
@@ -86,39 +60,51 @@ def _driver_vocab_rows(spark) -> int:
 _DRIVER_VOCAB_CHARS_MAX = 64 << 20
 
 
-def _take_type_table(words, word_col, count_col, budget, max_weighted=None):
-    """The driver-tier probe: take budget+1 eligible (word, count) rows.
-    Returns the list if it fits the budget (and is BMP-only, so the
-    Python char split mirrors Spark's UTF-16 ``split(w, '(?!$)')``
-    exactly), else None — callers then run the distributed loop.
+def _take_type_table(words, word_col, count_col, max_weighted=None):
+    """The driver-tier probe over the eligible (w, c) type table (see
+    ``runtime.collect_if_small``): ``(wc, None)`` when the classic
+    in-memory BPE/WordPiece loop may train on it — identical integer
+    arithmetic, tie-breaks and greedy fold, so the rules are
+    bit-for-bit the distributed loop's — else ``(None, frame)`` with
+    the (w, c) frame the distributed rounds start from.
 
-    ``max_weighted`` (ADVICE r12 low): ceiling on the total weighted
-    symbol count Σ c·|w| — every pair/unigram count the trainer forms
-    is bounded by it, so capping it at the int64-safe bound keeps the
-    driver tier inside the numeric contract of the distributed path
-    (which multiplies counts by ``WP_SCALE`` in int64 and would raise
-    under ANSI exactly where unbounded Python ints would silently
-    diverge). Falls back to distributed above the cap, preserving the
-    loud-overflow behavior."""
-    if budget <= 0:
-        return None
-    rows = (
-        words.filter(~F.col(word_col).contains(DELIM))
-        .select(F.col(word_col).alias("w"), F.col(count_col).alias("c"))
-        .take(budget + 1)
+    Besides the shared row budget the table must fit the character
+    ceiling and be BMP-only (so the Python char split mirrors Spark's
+    UTF-16 ``split(w, '(?!$)')`` exactly). ``max_weighted`` (ADVICE
+    r12 low): ceiling on the total weighted symbol count Σ c·|w| —
+    every pair/unigram count the trainer forms is bounded by it, so
+    capping it at the int64-safe bound keeps the driver tier inside the
+    numeric contract of the distributed path (which multiplies counts
+    by ``WP_SCALE`` in int64 and would raise under ANSI exactly where
+    unbounded Python ints would silently diverge)."""
+
+    def fits(rows):
+        if sum(len(r["w"]) for r in rows) > _DRIVER_VOCAB_CHARS_MAX:
+            return False  # byte budget: rows small, strings huge
+        if any(ord(ch) > 0xFFFF for r in rows for ch in r["w"]):
+            return False  # astral chars split per UTF-16 unit in the JVM
+        return max_weighted is None or (
+            sum(int(r["c"]) * max(len(r["w"]), 1) for r in rows)
+            <= max_weighted
+        )
+
+    rows, frame = collect_if_small(
+        words.filter(~F.col(word_col).contains(DELIM)).select(
+            F.col(word_col).alias("w"), F.col(count_col).alias("c")
+        ),
+        fits,
     )
-    if len(rows) > budget:
-        return None
-    wc = [(r["w"], int(r["c"])) for r in rows]
-    if sum(len(w) for w, _ in wc) > _DRIVER_VOCAB_CHARS_MAX:
-        return None  # byte budget: rows small, strings huge → distribute
-    if any(ord(ch) > 0xFFFF for w, _ in wc for ch in w):
-        return None  # astral chars split per UTF-16 unit in the JVM
-    if max_weighted is not None and (
-        sum(c * max(len(w), 1) for w, c in wc) > max_weighted
-    ):
-        return None
-    return wc
+    if rows is None:
+        return None, frame
+    return [(r["w"], int(r["c"])) for r in rows], None
+
+
+def _symbols(wc: DataFrame) -> DataFrame:
+    """(w, c, sym) — the distributed loops' symbol table. Split with
+    the empty-ish lookahead pattern yields chars without a trailing ''
+    element (Spark's split(w, '') appends one; '(?!$)' splits at every
+    position except end-of-string)."""
+    return wc.select("w", "c", F.split(F.col("w"), "(?!$)").alias("sym"))
 
 
 def _local_merge(syms: list, x: str, y: str, merged: str) -> list:
@@ -229,23 +215,14 @@ def bpe_train(
     frequency) — collapse the corpus first; that is the only
     corpus-sized step of the whole algorithm.
 
-    Small type tables (≤ ``DRIVER_VOCAB_CONF`` rows) train on the
-    driver with the identical arithmetic (see the constant's comment);
-    larger vocabularies run the distributed rounds below.
+    Small type tables train on the driver with the identical
+    arithmetic (see :func:`_take_type_table`); larger vocabularies run
+    the distributed rounds below.
     """
-    wc = _take_type_table(
-        words, word_col, count_col, _driver_vocab_rows(words.sparkSession)
-    )
+    wc, frame = _take_type_table(words, word_col, count_col)
     if wc is not None:
         return _bpe_train_local(wc, n_merges)
-    syms = words.filter(~F.col(word_col).contains(DELIM)).select(
-        F.col(word_col).alias("w"),
-        F.col(count_col).alias("c"),
-        F.split(F.col(word_col), "(?!$)").alias("sym"),
-    )
-    # split with the empty-ish lookahead pattern yields chars without a
-    # trailing '' element (Spark's split(w, '') appends one; '(?!$)' splits
-    # at every position except end-of-string)
+    syms = _symbols(frame)
     # LAZY persist chaining (opt r12): each round's fold result is
     # persisted lazily and materialized AS A SIDE EFFECT of the next
     # round's argmax collect, so a merge round costs exactly ONE Spark
@@ -338,22 +315,17 @@ def wordpiece_train(
     Small type tables take the driver tier, exactly as in
     :func:`bpe_train`.
     """
-    wc = _take_type_table(
+    wc, frame = _take_type_table(
         words,
         word_col,
         count_col,
-        _driver_vocab_rows(words.sparkSession),
         # any pair count is <= Σ c·|w|; keep cnt * WP_SCALE inside
         # int64 so both tiers share one numeric contract (ADVICE r12)
         max_weighted=(2**63 - 1) // WP_SCALE,
     )
     if wc is not None:
         return _wordpiece_train_local(wc, n_merges)
-    syms = words.filter(~F.col(word_col).contains(DELIM)).select(
-        F.col(word_col).alias("w"),
-        F.col(count_col).alias("c"),
-        F.split(F.col(word_col), "(?!$)").alias("sym"),
-    )
+    syms = _symbols(frame)
     # lazy persist chaining — same one-job-per-round discipline as
     # bpe_train (see the comment there)
     syms = syms.persist()

@@ -42,6 +42,8 @@ import pandas as pd  # module-level so stringified UDF type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime import collect_if_small
+
 SCALE = 1_000_000  # 1e-6 fixed point
 
 
@@ -134,46 +136,17 @@ def _best_struct(xf: Column, centroids: list[list[int]]) -> Column:
     return _best_cluster_np(xf, centroids)
 
 
-def _init_centroids(
-    embs: DataFrame, k: int, vec_col: str, id_col: str
-) -> list[list[int]]:
-    """Training-free deterministic init: the k lowest-id vectors (same rule
-    as similarity.first_n_centroids)."""
-    rows = (
-        embs.select(id_col, _fixed(vec_col).alias("xf"))
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
+def _init_centroids(fixed: DataFrame, k: int, id_col: str) -> list[list[int]]:
+    """Training-free deterministic init over an (id, xf) frame: the k
+    lowest-id vectors (same rule as similarity.first_n_centroids)."""
+    rows = fixed.orderBy(id_col).limit(k).collect()
     return [list(r["xf"]) for r in rows]
 
 
-#: Driver-tier budget for k-means FIT (opt r12, the bpe_train /
-#: pagerank_fixedpoint bounded-artifact pattern): when the quantized
-#: vector table has at most this many rows, the Lloyd iterations run in
-#: exact Python integers on the driver (~33 MB at 64 dims) — each
-#: distributed iteration otherwise costs a full Spark job whose
-#: k×dim-literal assignment expression re-compiles per round. Identical
-#: arithmetic, identical lowest-id tie-breaks; bit-equality with the
-#: distributed loop pinned in tests/test_clustering.py. Above the
-#: budget the distributed loop runs exactly as before. The fit's
-#: OUTPUT (k×dim centroids) is driver state in both tiers — only the
-#: fit input collection is gated. 0 disables the tier.
-KMEANS_DRIVER_CONF = "spark.data_engineering_etl.kmeans.driver_rows_max"
-_KMEANS_DRIVER_DEFAULT = 65536
 #: total fixed-point elements (rows × dim) the driver tier may collect
-#: — the byte-budget companion to the row cap (VERDICT r12 #6): 64 Ki
-#: rows × 64 dims of int64 ≈ 33 MB, the docstring's stated envelope.
+#: — the byte-budget companion to the shared row cap (VERDICT r12 #6):
+#: 64 Ki rows × 64 dims of int64 ≈ 33 MB.
 _KMEANS_DRIVER_ELEMS_MAX = 65536 * 64
-
-
-def _kmeans_driver_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(KMEANS_DRIVER_CONF, str(_KMEANS_DRIVER_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return _KMEANS_DRIVER_DEFAULT
 
 
 def _kmeans_fit_local(
@@ -220,31 +193,24 @@ def kmeans_fit(
     centroids (k × dim, 1e-6 fixed point). Empty clusters keep their
     previous centroid.
 
-    Small inputs (≤ ``KMEANS_DRIVER_CONF`` rows) fit on the driver with
+    Small inputs (within ``runtime.DRIVER_TIER_ROWS`` rows and
+    ``_KMEANS_DRIVER_ELEMS_MAX`` elements) fit on the driver with
     identical integer arithmetic; larger ones run the distributed loop
-    below, unchanged."""
-    budget = _kmeans_driver_rows(embs.sparkSession)
-    if budget > 0:
-        head = (
-            embs.select(id_col, _fixed(vec_col).alias("xf"))
-            .take(budget + 1)
-        )
-        # Dim-aware guard (opt r13 — VERDICT r12 #6): the row budget
-        # assumed ~64 dims (~33 MB); a 64 Ki-row × 4 Ki-dim table would
-        # collect ~2 GB. Cap rows × dim at the same total element count
-        # the default budget implies; above it, run distributed.
-        dim = len(head[0]["xf"]) if head else 0
-        if len(head) <= budget and len(head) * dim <= _KMEANS_DRIVER_ELEMS_MAX:
-            return _kmeans_fit_local(
-                [(r[0], r["xf"]) for r in head], k, n_iters
-            )
-    cents = _init_centroids(embs, k, vec_col, id_col)
-    # Each iteration re-scans the narrow (xf-only) projection rather than
-    # persisting it: measured locally the persist is a wash warm and SLOWER
-    # cold (memory-store population costs more than the pruned re-scan).
-    # On a cluster where the input is remote object storage, persist the
-    # projection (MEMORY_AND_DISK) before calling — the loop is agnostic.
-    xfdf = embs.select(_fixed(vec_col).alias("xf"))
+    below. The fit's OUTPUT (k×dim centroids) is driver state in both
+    tiers — only the fit input collection is gated."""
+
+    def fits(rows):
+        # rows × dim, not rows alone: 64 Ki rows × 4 Ki dims is ~2 GB
+        dim = len(rows[0]["xf"]) if rows else 0
+        return len(rows) * dim <= _KMEANS_DRIVER_ELEMS_MAX
+
+    rows, fixed = collect_if_small(
+        embs.select(id_col, _fixed(vec_col).alias("xf")), fits
+    )
+    if rows is not None:
+        return _kmeans_fit_local([(r[0], r["xf"]) for r in rows], k, n_iters)
+    cents = _init_centroids(fixed, k, id_col)
+    xfdf = fixed.select("xf")
     for _ in range(n_iters):
         assigned = xfdf.withColumn("cid", _best_struct(F.col("xf"), cents)["cid"])
         sums = (

@@ -29,6 +29,7 @@ import pandas as _pd  # module-level so stringified UDF type hints resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import runtime
 from ..functions.text import fingerprint, tokens
 from ..functions.vector import cosine
 from ..runtime import truncate_lineage, truncate_lineage_lazy
@@ -366,15 +367,9 @@ def _verify_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    # The verified pair set is tiny and is THE reusable product of this
-    # pipeline (clustering, keep-lists, audits all start from it) — persist
-    # it so a same-session re-derivation (e.g. neardup_groups after a pairs
-    # query) hits the cache via canonicalized-plan matching instead of
-    # re-running LSH end to end.
-    out = out.persist()
-    # Callers that materialize the result (e.g. neardup_groups) can release
-    # the intermediate caches afterwards without clearing unrelated caches.
-    out._cached_deps = [candidates, csh]  # type: ignore[attr-defined]
+    out = out.transform(truncate_lineage)  # tiny; frees both caches
+    candidates.unpersist()
+    csh.unpersist()
     return out
 
 
@@ -641,20 +636,6 @@ def neardup_groups(
     )
 
 
-#: Driver-tier budget for :func:`components_from_pairs` (opt r13 — the
-#: bpe/kmeans bounded-artifact pattern): at or below this many pairs the
-#: transitive closure runs as union-find on the driver (~1 MB of id
-#: pairs at the default) — each distributed min-label round otherwise
-#: costs a full Spark job (~0.3 s of scheduling at any sub-cache size)
-#: and shallow clusters still take diameter+1 rounds. Identical labels
-#: (union-by-min-root ⇒ root == component min == the propagation fixed
-#: point), pinned by test. 0 disables the tier.
-COMPONENTS_DRIVER_CONF = (
-    "spark.data_engineering_etl.components.driver_pairs_max"
-)
-_COMPONENTS_DRIVER_DEFAULT = 65536
-
-
 def _components_driver(pair_rows) -> list:
     """Union-find with min-root over collected (a, b) pairs — the
     driver tier of :func:`components_from_pairs`. Attaching the larger
@@ -698,34 +679,24 @@ def components_from_pairs(
     LSH, embedding cosine, fuzzy entity matching) composes into
     transitive clusters. Semantics and cost discipline documented there.
 
-    Pair graphs at or below ``COMPONENTS_DRIVER_CONF`` pairs (with
+    Pair graphs within ``runtime.DRIVER_TIER_ROWS`` pairs (with
     numeric ids, where Python's ``<`` matches Spark's ``min`` ordering
     exactly) resolve on the driver via union-find — identical labels,
     one collect instead of diameter+1 jobs. Larger graphs run the
     distributed loop below, unchanged.
     """
-    # Materialize the (small) pair graph, cut the producer's plan out of
-    # the loop's lineage, then drop the caches it left behind. The count
-    # is free (the checkpoint just materialized the rows) and drives the
+    # Materialize the (small) pair graph and cut the producer's plan out
+    # of the loop's lineage. The count is free (the checkpoint just
+    # materialized the rows); it gates the driver tier and drives the
     # parallelism decision below.
     pairs = pairs.transform(truncate_lineage_lazy)
     n_pairs = pairs.count()
-    for dep in getattr(pairs, "_cached_deps", []):
-        dep.unpersist()
     from pyspark.sql import types as T
 
     spark = pairs.sparkSession
-    try:
-        budget = int(
-            spark.conf.get(
-                COMPONENTS_DRIVER_CONF, str(_COMPONENTS_DRIVER_DEFAULT)
-            )
-        )
-    except (TypeError, ValueError):
-        budget = _COMPONENTS_DRIVER_DEFAULT
     idt = pairs.schema[a_col].dataType
     if (
-        0 < n_pairs <= budget
+        0 < n_pairs <= runtime.DRIVER_TIER_ROWS
         and isinstance(
             idt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
         )

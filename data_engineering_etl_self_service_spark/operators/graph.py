@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..runtime import truncate_lineage, truncate_lineage_lazy
+from ..runtime import collect_if_small, truncate_lineage, truncate_lineage_lazy
 
 SCALE = 1_000_000_000  # 1e-9 fixed point for ranks
 
@@ -449,41 +449,33 @@ def triangle_counts(
     return out
 
 
-#: Driver-tier budget for the fixed-round graph loops below (opt r13 —
-#: the bpe/kmeans/components bounded-artifact pattern): at or below
-#: this many (aggregated) edges, the ``rounds`` iterations run in exact
-#: Python integers on the driver — each distributed round otherwise
-#: costs a full Spark job (~0.3 s of scheduling at any sub-cache size)
-#: on graphs that are routinely dimension-table-sized (25 nations, ~40
-#: trade lanes). Identical arithmetic (integer min-relaxation / integer
-#: degree peeling), parity pinned in tests; node ids may be any type
-#: (the loops use only equality/hashing). 0 disables the tier.
-GRAPH_DRIVER_CONF = "spark.data_engineering_etl.graph.driver_edges_max"
-_GRAPH_DRIVER_DEFAULT = 65536
+def _driver_frame(spark, rows, node_t, value_col: str) -> DataFrame:
+    """(node, <value_col>) frame of a driver-tier result."""
+    from pyspark.sql import types as T
+
+    return spark.createDataFrame(
+        rows,
+        T.StructType(
+            [
+                T.StructField("node", node_t, False),
+                T.StructField(value_col, T.LongType(), False),
+            ]
+        ),
+    )
 
 
-def _graph_driver_edges(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(GRAPH_DRIVER_CONF, str(_GRAPH_DRIVER_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return _GRAPH_DRIVER_DEFAULT
-
-
-def _relax_driver(rows, source, rounds, weighted) -> list:
+def _relax_driver(rows, source, rounds) -> list:
     """Round-synchronous min-relaxation in Python ints — the driver
-    tier of :func:`bfs_hops` / :func:`bellman_ford`. Each round pushes
-    ``d + w`` (or ``d + 1``) from every node reached at round START and
-    keeps the per-node MIN — exactly the distributed union+groupBy."""
+    tier of :func:`bellman_ford`. Each round pushes ``d + w`` from
+    every node reached at round START and keeps the per-node MIN —
+    exactly the distributed union+groupBy. Node ids may be any type
+    (only equality/hashing is used)."""
     adj: dict = {}
     nodes = set()
-    for r in rows:
-        s, d = r[0], r[1]
-        w = int(r[2]) if weighted else 1
+    for s, d, w in rows:
         nodes.add(s)
         nodes.add(d)
-        adj.setdefault(s, []).append((d, w))
+        adj.setdefault(s, []).append((d, int(w)))
     dist = {source: 0} if source in nodes else {}
     for _ in range(rounds):
         new = dict(dist)
@@ -519,14 +511,10 @@ def kcore_peel(
     Returns (node, deg): the nodes still present after ``rounds`` peels
     with their degrees in the surviving subgraph.
 
-    Normalized edge lists at or below ``GRAPH_DRIVER_CONF`` peel on the
-    driver in exact Python integers (identical degree threshold per
-    round); larger graphs run the distributed loop, unchanged.
+    Normalized edge lists within ``runtime.DRIVER_TIER_ROWS`` peel on
+    the driver in exact Python integers (identical degree threshold per
+    round); larger graphs run the distributed loop.
     """
-    from pyspark.sql import types as T
-
-    spark = edges.sparkSession
-    budget = _graph_driver_edges(spark)
     e_base = (
         edges.select(F.col(node_a).alias("x"), F.col(node_b).alias("y"))
         .filter(F.col("x") != F.col("y"))
@@ -535,41 +523,26 @@ def kcore_peel(
         )
         .distinct()
     )
-    if budget > 0:
-        e_base = e_base.persist()
-        probe = e_base.take(budget + 1)
-        if len(probe) <= budget:
-            es = [(r[0], r[1]) for r in probe]
-            for _ in range(rounds):
-                deg: dict = {}
-                for u, v in es:
-                    deg[u] = deg.get(u, 0) + 1
-                    deg[v] = deg.get(v, 0) + 1
-                keep = {n for n, d in deg.items() if d >= k}
-                es = [(u, v) for u, v in es if u in keep and v in keep]
-            deg = {}
+    rows, e = collect_if_small(e_base)
+    if rows is not None:
+        es = [(r[0], r[1]) for r in rows]
+        for _ in range(rounds):
+            deg: dict = {}
             for u, v in es:
                 deg[u] = deg.get(u, 0) + 1
                 deg[v] = deg.get(v, 0) + 1
-            node_t = e_base.schema["u"].dataType
-            e_base.unpersist()
-            return spark.createDataFrame(
-                sorted(deg.items()),
-                T.StructType(
-                    [
-                        T.StructField("node", node_t, False),
-                        T.StructField("deg", T.LongType(), False),
-                    ]
-                ),
-            )
-    e = e_base.transform(truncate_lineage_lazy)
-    if budget > 0:
-        # the lazy checkpoint materializes on the first round's action,
-        # reading the persisted rows; drop the cache after the loop via
-        # the final degrees() action would be ideal, but the loop
-        # rebinds ``e`` each round — release the probe cache here (the
-        # first round may recompute the distinct once, as before).
-        e_base.unpersist()
+            keep = {n for n, d in deg.items() if d >= k}
+            es = [(u, v) for u, v in es if u in keep and v in keep]
+        deg = {}
+        for u, v in es:
+            deg[u] = deg.get(u, 0) + 1
+            deg[v] = deg.get(v, 0) + 1
+        return _driver_frame(
+            edges.sparkSession,
+            sorted(deg.items()),
+            e_base.schema["u"].dataType,
+            "deg",
+        )
 
     def degrees(ed: DataFrame) -> DataFrame:
         return (
@@ -599,75 +572,19 @@ def bfs_hops(
 ) -> DataFrame:
     """``rounds`` iterations of BFS distance relaxation over a directed
     edge list: min hops from ``source`` to every reachable node (within
-    the round budget). The Bellman-Ford-style frontier pattern of
-    Pregel/GraphX, kept as plain DataFrame ops: per round, reached nodes
-    push ``d+1`` along their out-edges and every node keeps its MIN —
-    one broadcast join of the |V|-sized distance table against the edge
-    list plus one map-side-combined groupBy per round (the
-    pagerank_fixedpoint iteration shape), lineage truncated per round.
+    the round budget) — :func:`bellman_ford` over unit-weight edges.
     A fixed round budget = the graph-diameter bound the caller asserts;
     it also keeps the operator unrollable as a SQL oracle.
 
     Returns (node, hops) for nodes reached within ``rounds``.
-
-    Edge lists at or below ``GRAPH_DRIVER_CONF`` run the rounds on the
-    driver in exact Python integers (identical round-synchronous min
-    relaxation); larger graphs run the distributed loop, unchanged.
     """
-    from pyspark.sql import types as T
-
-    spark = edges.sparkSession
-    budget = _graph_driver_edges(spark)
-    e_base = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    if budget > 0:
-        e_base = e_base.persist()
-        probe = e_base.take(budget + 1)
-        if len(probe) <= budget:
-            out = _relax_driver(probe, source, rounds, weighted=False)
-            node_t = e_base.schema["src"].dataType
-            e_base.unpersist()
-            return spark.createDataFrame(
-                out,
-                T.StructType(
-                    [
-                        T.StructField("node", node_t, False),
-                        T.StructField("hops", T.LongType(), False),
-                    ]
-                ),
-            )
-    e = e_base.transform(truncate_lineage)
-    if budget > 0:
-        e_base.unpersist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(truncate_lineage)
+    unit = edges.select(
+        F.col(src_col).alias("src"),
+        F.col(dst_col).alias("dst"),
+        F.lit(1).cast("long").alias("w"),
     )
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node") == F.lit(source), F.lit(0))
-        .cast("long")
-        .alias("d"),
-    )
-    for _ in range(rounds):
-        reached = dist.filter(F.col("d").isNotNull())
-        pushed = e.join(
-            F.broadcast(reached.withColumnRenamed("node", "src")), "src"
-        ).select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
-        dist = (
-            reached.select("node", "d")
-            .unionByName(pushed)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .join(nodes, "node", "right")
-            .select("node", "d")
-            .transform(truncate_lineage_lazy)
-        )
-    return dist.filter(F.col("d").isNotNull()).select(
-        "node", F.col("d").alias("hops")
+    return bellman_ford(unit, source, rounds, weight_col="w").select(
+        "node", F.col("cost").alias("hops")
     )
 
 
@@ -681,23 +598,23 @@ def bellman_ford(
 ) -> DataFrame:
     """``rounds`` iterations of WEIGHTED distance relaxation
     (Bellman-Ford): minimum total integer cost from ``source`` within
-    the round budget — the :func:`bfs_hops` frontier pattern pushing
-    ``d + cost`` instead of ``d + 1``. Exact with non-negative integer
-    weights, so the SQL oracle unrolls round for round and the result
-    hash-matches. ``rounds`` bounds path LENGTH (edges), the caller's
-    diameter assertion, exactly like bfs_hops.
+    the round budget. The Bellman-Ford-style frontier pattern of
+    Pregel/GraphX, kept as plain DataFrame ops: per round, reached
+    nodes push ``d + cost`` along their out-edges and every node keeps
+    its MIN — one broadcast join of the |V|-sized distance table
+    against the edge list plus one map-side-combined groupBy per round
+    (the pagerank_fixedpoint iteration shape), lineage truncated per
+    round. Exact with non-negative integer weights, so the SQL oracle
+    unrolls round for round and the result hash-matches. ``rounds``
+    bounds path LENGTH (edges), the caller's diameter assertion.
 
     Returns (node, cost) for nodes reached within ``rounds``.
 
-    Aggregated edge lists at or below ``GRAPH_DRIVER_CONF`` run the
+    Aggregated edge lists within ``runtime.DRIVER_TIER_ROWS`` run the
     rounds on the driver in exact Python integers (identical
     round-synchronous min relaxation); larger graphs run the
-    distributed loop, unchanged.
+    distributed loop.
     """
-    from pyspark.sql import types as T
-
-    spark = edges.sparkSession
-    budget = _graph_driver_edges(spark)
     e_base = (
         edges.select(
             F.col(src_col).alias("src"),
@@ -707,25 +624,14 @@ def bellman_ford(
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
     )
-    if budget > 0:
-        e_base = e_base.persist()
-        probe = e_base.take(budget + 1)
-        if len(probe) <= budget:
-            out = _relax_driver(probe, source, rounds, weighted=True)
-            node_t = e_base.schema["src"].dataType
-            e_base.unpersist()
-            return spark.createDataFrame(
-                out,
-                T.StructType(
-                    [
-                        T.StructField("node", node_t, False),
-                        T.StructField("cost", T.LongType(), False),
-                    ]
-                ),
-            )
-    e = e_base.transform(truncate_lineage)
-    if budget > 0:
-        e_base.unpersist()
+    rows, e = collect_if_small(e_base)
+    if rows is not None:
+        return _driver_frame(
+            edges.sparkSession,
+            _relax_driver(rows, source, rounds),
+            e_base.schema["src"].dataType,
+            "cost",
+        )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))

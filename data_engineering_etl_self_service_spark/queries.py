@@ -39,7 +39,7 @@ from .functions.text import (
     word_shingles,
 )
 from .session import ensure_session_defaults
-from .runtime import spread_scan, truncate_lineage
+from .runtime import collect_if_small, spread_scan, truncate_lineage
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -7455,7 +7455,7 @@ def corpus_dedup_report(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("f").alias("nd"),
     )
-    pairs = minhash_lsh_pairs(d, "text", "doc_id", 3, 0.8).persist()
+    pairs = minhash_lsh_pairs(d, "text", "doc_id", 3, 0.8)  # materialized
     n_pairs = pairs.count()
     n_paired = (
         pairs.select(F.col("doc_a").alias("d"))
@@ -7463,7 +7463,6 @@ def corpus_dedup_report(spark, sf_dir):
         .distinct()
         .count()
     )
-    pairs.unpersist()
     return exact.select(
         F.col("n").alias("n_docs"),
         (F.col("n") - F.col("nd")).alias("n_exact_copies"),
@@ -8760,31 +8759,15 @@ def rfm_scores(spark, sf_dir):
     # arithmetic (the ntile_bucket formula in Python ints over the
     # same total orders), parity pinned in test_ranking.py. Above the
     # budget (the 100 TB shape: customers ≫ 64 Ki) the distributed
-    # path below is unchanged.
-    budget = _rank_driver_rows(spark)
-    if budget > 0:
-        head = _rfm_base(spark, sf_dir).take(budget + 1)
-        if len(head) <= budget:
-            return _rfm_driver(spark, head)
-    out, handles = _rfm_build(spark, sf_dir)
+    # path ranks the probe's materialized base.
+    head, base = collect_if_small(_rfm_base(spark, sf_dir))
+    if head is not None:
+        return _rfm_driver(spark, head)
+    out, handles = _rfm_build(base)
     out = out.transform(truncate_lineage)  # ≤125 segment rows; frees caches
     for h in handles:
         h.unpersist()
     return out
-
-
-#: row budget for the rfm driver tier (0 disables)
-RANK_DRIVER_CONF = "spark.data_engineering_etl.rank.driver_rows_max"
-_RANK_DRIVER_DEFAULT = 65536
-
-
-def _rank_driver_rows(spark) -> int:
-    try:
-        return int(
-            spark.conf.get(RANK_DRIVER_CONF, str(_RANK_DRIVER_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return _RANK_DRIVER_DEFAULT
 
 
 def _ntile_py(rank: int, total: int, k: int) -> int:
@@ -8868,8 +8851,7 @@ def _rfm_base(spark, sf_dir):
     )
 
 
-def _rfm_build(spark, sf_dir):
-    base = _rfm_base(spark, sf_dir)
+def _rfm_build(base):
     # NTILE(5) ... ORDER BY recency_days DESC ≡ ascending on the negation
     dims = [
         ("r", [-F.col("recency_days"), F.col("custkey")]),
@@ -8893,7 +8875,9 @@ def _rfm_build(spark, sf_dir):
     return out, handles
 
 
-PLAN_VIEWS["rfm_scores"] = lambda spark, sf_dir: _rfm_build(spark, sf_dir)[0]
+PLAN_VIEWS["rfm_scores"] = lambda spark, sf_dir: _rfm_build(
+    _rfm_base(spark, sf_dir)
+)[0]
 
 
 @register(

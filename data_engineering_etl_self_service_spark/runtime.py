@@ -1,4 +1,5 @@
-"""Runtime knobs shared across operators — lineage truncation policy.
+"""Runtime policies shared across operators — lineage truncation and
+the driver-tier budget.
 
 Iterative operators (connected components, PageRank/BFS/k-core loops,
 BPE merge rounds, greedy selection) re-materialize their carried
@@ -23,6 +24,20 @@ the flag) and every truncation site switches to ``checkpoint()``: the
 materialized blocks go to the checkpoint directory's fault-tolerant
 storage, so executor loss costs a re-read, not the job. The flag is
 read per call, so tests and notebooks can flip it mid-session.
+
+The module also owns the DRIVER-TIER budget. Iterative operators whose
+input is routinely dimension-table-sized (graph rounds, BPE merges,
+k-means fit, NTILE ranks, union-find) run their rounds in exact Python
+on the driver when the input has at most ``DRIVER_TIER_ROWS`` rows —
+each distributed round otherwise costs a full Spark job. Every such
+site goes through :func:`collect_if_small`, which persists the input,
+probes ``DRIVER_TIER_ROWS + 1`` rows and either returns them (and
+releases the cache) or hands the distributed path an eager checkpoint
+read from the persisted partitions (and releases the cache after it).
+No path recomputes the probe's upstream and no path leaves a cache
+behind. There is no conf for the budget: tests force the distributed
+path by patching ``runtime.DRIVER_TIER_ROWS`` (0 probes one row and
+falls back on any non-empty input, the 100 TB shape).
 """
 
 from __future__ import annotations
@@ -32,6 +47,15 @@ from pyspark.sql import functions as F
 
 RELIABLE_FLAG = "spark.data_engineering_etl.checkpoint.reliable"
 CHECKPOINT_DIR = "spark.data_engineering_etl.checkpoint.dir"
+
+#: Driver-tier budget shared by every size-gated iterative operator: at
+#: or below this many input rows the rounds run in exact Python on the
+#: driver (identical arithmetic and tie-breaks, parity pinned per site
+#: in the tests). 64 Ki rows of ids, (word, count) pairs or quantized
+#: vectors is the bounded-driver-artifact class of pagerank's n_nodes
+#: or k-means' centroids; sites whose rows can be wide add their own
+#: byte ceiling through ``collect_if_small``'s ``fits`` predicate.
+DRIVER_TIER_ROWS = 65536
 
 
 def truncate_lineage_lazy(df: DataFrame) -> DataFrame:
@@ -128,3 +152,24 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def collect_if_small(df: DataFrame, fits=None):
+    """The driver-tier probe: ``(rows, None)`` when ``df`` has at most
+    ``DRIVER_TIER_ROWS`` rows and ``fits(rows)`` holds (or ``fits`` is
+    None), else ``(None, frame)``.
+
+    ``df`` is persisted for the probe. On the driver path it is
+    released before returning. On the distributed path ``frame`` is
+    ``df`` eagerly truncated (:func:`truncate_lineage`), materialized
+    from the persisted partitions, and ``df`` is released only after
+    that — so the probe's upstream runs once on either path and the
+    caller owns no cache."""
+    df = df.persist()
+    rows = df.take(DRIVER_TIER_ROWS + 1)
+    if len(rows) <= DRIVER_TIER_ROWS and (fits is None or fits(rows)):
+        df.unpersist()
+        return rows, None
+    frame = df.transform(truncate_lineage)
+    df.unpersist()
+    return None, frame

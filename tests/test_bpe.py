@@ -262,13 +262,14 @@ def test_unigram_hard_em_prunes_and_recounts(spark):
     # the prune fell out: ba/aba/b carry no rows at all
 
 
-def test_driver_tier_matches_distributed_loop(spark):
-    """The ≤DRIVER_VOCAB_CONF driver tier must produce bit-identical
-    rules to the distributed merge rounds — both for BPE (count argmax)
-    and WordPiece (floored likelihood-ratio argmax). Run the same
-    word-type table through both paths by flipping the budget conf."""
+def test_driver_tier_matches_distributed_loop(spark, monkeypatch):
+    """The ≤runtime.DRIVER_TIER_ROWS driver tier must produce
+    bit-identical rules to the distributed merge rounds — both for BPE
+    (count argmax) and WordPiece (floored likelihood-ratio argmax). Run
+    the same word-type table through both paths by patching the
+    budget."""
+    from data_engineering_etl_self_service_spark import runtime
     from data_engineering_etl_self_service_spark.operators.bpe import (
-        DRIVER_VOCAB_CONF,
         bpe_train,
         wordpiece_train,
     )
@@ -278,22 +279,22 @@ def test_driver_tier_matches_distributed_loop(spark):
          ("new", 7), ("aaa", 4), ("", 2)],
         "w string, c long",
     )
-    spark.conf.set(DRIVER_VOCAB_CONF, "0")  # force distributed
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # force distributed
         dist_bpe = bpe_train(words, n_merges=6)
         dist_wp = wordpiece_train(words, n_merges=6)
-    finally:
-        spark.conf.unset(DRIVER_VOCAB_CONF)
     local_bpe = bpe_train(words, n_merges=6)
     local_wp = wordpiece_train(words, n_merges=6)
     assert local_bpe == dist_bpe
     assert local_wp == dist_wp
 
 
-def test_driver_tier_budget_and_astral_fallback(spark):
+def test_driver_tier_budget_and_astral_fallback(spark, monkeypatch):
     """Above-budget or astral-char word tables must take the
-    distributed path (the probe returns None): astral chars split per
-    UTF-16 unit in the JVM, which list(w) would not mirror."""
+    distributed path (the probe hands off a frame instead of rows):
+    astral chars split per UTF-16 unit in the JVM, which list(w) would
+    not mirror."""
+    from data_engineering_etl_self_service_spark import runtime
     from data_engineering_etl_self_service_spark.operators.bpe import (
         _take_type_table,
     )
@@ -301,9 +302,22 @@ def test_driver_tier_budget_and_astral_fallback(spark):
     words = spark.createDataFrame(
         [("abc", 1), ("abd", 2), ("xyz", 3)], "w string, c long"
     )
-    assert _take_type_table(words, "w", "c", 2) is None  # over budget
-    assert _take_type_table(words, "w", "c", 0) is None  # tier disabled
-    got = _take_type_table(words, "w", "c", 10)
-    assert sorted(got) == [("abc", 1), ("abd", 2), ("xyz", 3)]
+    everything = [("abc", 1), ("abd", 2), ("xyz", 3)]
+
+    def handed_off(wc_frame):
+        wc, frame = wc_frame
+        assert wc is None
+        return sorted(tuple(r) for r in frame.collect())
+
+    with monkeypatch.context() as m:
+        m.setattr(runtime, "DRIVER_TIER_ROWS", 2)  # over budget
+        assert handed_off(_take_type_table(words, "w", "c")) == everything
+        m.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # budget-0 hand-off
+        assert handed_off(_take_type_table(words, "w", "c")) == everything
+    got, frame = _take_type_table(words, "w", "c")
+    assert frame is None
+    assert sorted(got) == everything
     astral = spark.createDataFrame([("a\U0001F600b", 1)], "w string, c long")
-    assert _take_type_table(astral, "w", "c", 10) is None
+    assert handed_off(_take_type_table(astral, "w", "c")) == [
+        ("a\U0001F600b", 1)
+    ]

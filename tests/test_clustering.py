@@ -147,8 +147,8 @@ def test_assignment_expression_and_numpy_paths_bit_equal(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "embeddings").limit(200)
-    cents = _init_centroids(e, 20, "embedding", "vec_id")
     df = e.select("vec_id", _fixed("embedding").alias("xf"))
+    cents = _init_centroids(df, 20, "vec_id")
     expr = {
         r.vec_id: (r.d2, r.cid)
         for r in df.withColumn("b", _best_cluster(F.col("xf"), cents))
@@ -164,21 +164,19 @@ def test_assignment_expression_and_numpy_paths_bit_equal(spark, sf_dir):
     assert expr == nump and len(expr) == 200
 
 
-def test_kmeans_driver_tier_matches_distributed_loop(spark, sf_dir):
-    """The ≤KMEANS_DRIVER_CONF fit tier must produce bit-identical
+def test_kmeans_driver_tier_matches_distributed_loop(spark, sf_dir, monkeypatch):
+    """The ≤runtime.DRIVER_TIER_ROWS fit tier must produce bit-identical
     centroids to the distributed Lloyd loop (same init, same argmin
     tie-break, same floor-div update, same empty-cluster carry)."""
+    from data_engineering_etl_self_service_spark import runtime
     from data_engineering_etl_self_service_spark.catalog import load_table
     from data_engineering_etl_self_service_spark.operators.clustering import (
-        KMEANS_DRIVER_CONF,
         kmeans_fit,
     )
 
     embs = load_table(spark, sf_dir, "embeddings")
-    spark.conf.set(KMEANS_DRIVER_CONF, "0")  # force distributed
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # force distributed
         dist = kmeans_fit(embs, k=5, n_iters=3)
-    finally:
-        spark.conf.unset(KMEANS_DRIVER_CONF)
     local = kmeans_fit(embs, k=5, n_iters=3)
     assert local == dist

@@ -409,14 +409,14 @@ def test_srp_lsh_subset_of_exact_with_pinned_recall(spark, sf_dir):
     assert len(got) / len(exact) >= 0.9
 
 
-def test_components_driver_tier_matches_distributed_loop(spark):
+def test_components_driver_tier_matches_distributed_loop(spark, monkeypatch):
     """opt r13: below the pair budget, connected components resolve on
     the driver via union-find with min-root. Labels must be IDENTICAL
     to the distributed min-label-propagation loop (root == component
     min == the propagation fixed point), on a graph with chains,
     cycles, a star, and singleton-free pair structure."""
+    from data_engineering_etl_self_service_spark import runtime
     from data_engineering_etl_self_service_spark.operators.dedup import (
-        COMPONENTS_DRIVER_CONF,
         components_from_pairs,
     )
 
@@ -434,11 +434,9 @@ def test_components_driver_tier_matches_distributed_loop(spark):
             for r in components_from_pairs(pairs, "doc_a", "doc_b").collect()
         )
 
-    spark.conf.set(COMPONENTS_DRIVER_CONF, "0")  # force distributed
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # force distributed
         dist = run()
-    finally:
-        spark.conf.unset(COMPONENTS_DRIVER_CONF)
     drv = run()  # default budget: driver tier
     assert drv == dist
     groups = dict(drv)

@@ -286,13 +286,13 @@ def test_bellman_ford_hand_graph_and_fixpoint(spark, sf_dir):
     assert all(r["cost"] >= 0 for r in rows)
 
 
-def test_graph_driver_tiers_match_distributed_loops(spark):
+def test_graph_driver_tiers_match_distributed_loops(spark, monkeypatch):
     """opt r13: bfs_hops / bellman_ford / kcore_peel run their rounds
     on the driver below the edge budget. Both tiers must produce
     identical rows on graphs with cycles, unreachable islands, and
     parallel edges."""
+    from data_engineering_etl_self_service_spark import runtime
     from data_engineering_etl_self_service_spark.operators.graph import (
-        GRAPH_DRIVER_CONF,
         bellman_ford,
         bfs_hops,
         kcore_peel,
@@ -323,11 +323,8 @@ def test_graph_driver_tiers_match_distributed_loops(spark):
         )
 
     drv = run_all()  # default budget: driver tier
-    spark.conf.set(GRAPH_DRIVER_CONF, "0")  # force distributed
-    try:
-        dist = run_all()
-    finally:
-        spark.conf.unset(GRAPH_DRIVER_CONF)
+    monkeypatch.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # force distributed
+    dist = run_all()
     assert drv == dist
 
 

@@ -193,14 +193,12 @@ def test_sharded_running_agg_plan_has_no_single_partition(spark):
     assert "hashpartitioning(__shard" in plan, plan
 
 
-def test_rfm_driver_tier_matches_distributed_rank(spark, sf_dir):
+def test_rfm_driver_tier_matches_distributed_rank(spark, sf_dir, monkeypatch):
     """opt r13: rfm_scores' driver tier (Python NTILE over the
     collected per-customer base) must produce exactly the
     distributed_rank/ntile_bucket path's segment rows."""
-    from data_engineering_etl_self_service_spark.queries import (
-        QUERIES,
-        RANK_DRIVER_CONF,
-    )
+    from data_engineering_etl_self_service_spark import runtime
+    from data_engineering_etl_self_service_spark.queries import QUERIES
 
     def run():
         return sorted(
@@ -208,10 +206,7 @@ def test_rfm_driver_tier_matches_distributed_rank(spark, sf_dir):
         )
 
     drv = run()  # default budget: driver tier at fixture scale
-    spark.conf.set(RANK_DRIVER_CONF, "0")  # force distributed
-    try:
-        dist = run()
-    finally:
-        spark.conf.unset(RANK_DRIVER_CONF)
+    monkeypatch.setattr(runtime, "DRIVER_TIER_ROWS", 0)  # force distributed
+    dist = run()
     assert drv == dist
     assert len(drv) > 0

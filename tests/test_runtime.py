@@ -14,10 +14,12 @@ import os
 
 import pytest
 
+from data_engineering_etl_self_service_spark import runtime
 from data_engineering_etl_self_service_spark.queries import QUERIES
 from data_engineering_etl_self_service_spark.runtime import (
     CHECKPOINT_DIR,
     RELIABLE_FLAG,
+    collect_if_small,
     truncate_lineage,
 )
 
@@ -107,3 +109,94 @@ def test_spread_scan_spreads_small_scans_deterministically(spark):
     out2 = spread_scan(df)
     assert out2.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r.id for r in out2.collect()) == list(range(97))
+
+
+def _cache_entries(spark) -> int:
+    """CacheManager entries of the session (no public count)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_collect_if_small_returns_rows_below_budget(spark):
+    spark.catalog.clearCache()
+    rows, frame = collect_if_small(spark.range(0, 20, 1, 3))
+    assert frame is None
+    assert sorted(r.id for r in rows) == list(range(20))
+    assert _cache_entries(spark) == 0
+
+
+def test_collect_if_small_hands_off_frame_above_budget(spark, monkeypatch):
+    spark.catalog.clearCache()
+    monkeypatch.setattr(runtime, "DRIVER_TIER_ROWS", 5)
+    rows, frame = collect_if_small(spark.range(0, 20, 1, 3))
+    assert rows is None
+    assert _cache_entries(spark) == 0
+    assert sorted(r.id for r in frame.collect()) == list(range(20))
+    plan = frame._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan  # materialized
+
+
+def test_collect_if_small_rejecting_fits_hands_off(spark):
+    spark.catalog.clearCache()
+    seen = []
+
+    def fits(rows):
+        seen.append(len(rows))
+        return False
+
+    rows, frame = collect_if_small(spark.range(0, 7, 1, 2), fits)
+    assert rows is None and seen == [7]
+    assert sorted(r.id for r in frame.collect()) == list(range(7))
+    assert _cache_entries(spark) == 0
+
+
+def test_collect_if_small_runs_upstream_once_above_budget(spark, monkeypatch):
+    """The hand-off frame is checkpointed from the probe's persisted
+    partitions: a Python UDF upstream of the probe runs once per row,
+    not once for the probe and again for the distributed path."""
+    from pyspark.sql import functions as F
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(runtime, "DRIVER_TIER_ROWS", 5)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x * 2
+
+    n = 50
+    df = spark.range(0, n, 1, 4).select(counted("id").alias("y"))
+    rows, frame = collect_if_small(df)
+    assert rows is None
+    assert sorted(r.y for r in frame.collect()) == [2 * i for i in range(n)]
+    assert calls.value == n
+    assert _cache_entries(spark) == 0
+
+
+@pytest.mark.parametrize("budget", [None, 0], ids=["default", "budget0"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "rfm_scores",
+        "kcore_parts",
+        "trade_hops",
+        "cheapest_trade_route",
+        "minhash_lsh_dedup",
+        "neardup_groups",
+    ],
+)
+def test_driver_tier_queries_leave_no_cache_entries(
+    spark, sf_dir, monkeypatch, name, budget
+):
+    """Every driver-tier site (and the LSH verify it feeds) releases its
+    caches on both tiers: after collect() the CacheManager is empty, so
+    repeated calls and any call order time and behave the same."""
+    spark.catalog.clearCache()
+    if budget is not None:
+        monkeypatch.setattr(runtime, "DRIVER_TIER_ROWS", budget)
+    assert QUERIES[name](spark, sf_dir).collect()
+    assert _cache_entries(spark) == 0
+
