@@ -107,8 +107,10 @@ def _read_source(spark: SparkSession, spec: PipelineSpec, ds: str | None) -> Dat
         # batch change feed for versions (after_version, to_version] —
         # (row..., change_type, version). A scheduled run passes the
         # version it last consumed as after_version (template fields
-        # substitute like every other option); the streaming twin is
-        # spark.readStream.format("snapshot_cdf") (sources/cdf.py).
+        # substitute like every other option). The batch feed reads
+        # through the same per-file planner as the streaming twin,
+        # spark.readStream.format("snapshot_cdf") (sources/cdf.py), so
+        # both emit the same rows under the same columns.
         # key_cols (round 12) switches to KEYED classification:
         # same-version delete+insert pairs become
         # update_preimage/update_postimage rows, unchanged restated

@@ -14740,9 +14740,9 @@ def keyed_change_feed(spark, sf_dir):
     CDC affordable: a restatement costs its diff, not the table). The
     oracle restates the four classes over plain orders.
 
-    Plan: the unkeyed per-version feed plus ONE full-outer
-    reconciliation join on (version, key) + explode — at 100 TB both
-    sides shuffle once on the key, the snapshot_diff cost contract.
+    Plan: the per-file feed (one MapInArrow node) plus ONE grouped
+    reconciliation on (version, key) + explode — at 100 TB the feed
+    shuffles once on the key, the snapshot_diff cost contract.
     """
     import os
 

@@ -302,6 +302,77 @@ def _dirs_look_partitioned(base_dir: str, dirs: list) -> bool:
     return False
 
 
+def _parse_simple_type(s: str):
+    """Parse a Spark ``simpleString`` type (the shape snapshot
+    manifests record, e.g. ``struct<o_orderkey:bigint,ps:array<int>>``)
+    into a ``DataType`` WITHOUT a SparkContext — ``DataSource.schema()``
+    runs in a plan-time Python worker where no session exists, so
+    ``_parse_datatype_string`` is unavailable there."""
+    from pyspark.sql import types as T
+
+    s = s.strip()
+    atomic = {
+        "boolean": T.BooleanType,
+        "tinyint": T.ByteType,
+        "byte": T.ByteType,
+        "smallint": T.ShortType,
+        "short": T.ShortType,
+        "int": T.IntegerType,
+        "integer": T.IntegerType,
+        "bigint": T.LongType,
+        "long": T.LongType,
+        "float": T.FloatType,
+        "double": T.DoubleType,
+        "string": T.StringType,
+        "binary": T.BinaryType,
+        "date": T.DateType,
+        "timestamp": T.TimestampType,
+        "timestamp_ntz": T.TimestampNTZType,
+        "void": T.NullType,
+    }
+    if s in atomic:
+        return atomic[s]()
+    if s.startswith("decimal(") and s.endswith(")"):
+        p, sc = s[len("decimal(") : -1].split(",")
+        return T.DecimalType(int(p), int(sc))
+    if s == "decimal":
+        return T.DecimalType(10, 0)
+    if s.startswith(("char(", "varchar(")):
+        return T.StringType()
+
+    def _split_top(body: str) -> list[str]:
+        parts, depth, cur = [], 0, []
+        for ch in body:
+            if ch == "<" or ch == "(":
+                depth += 1
+            elif ch == ">" or ch == ")":
+                depth -= 1
+            if ch == "," and depth == 0:
+                parts.append("".join(cur))
+                cur = []
+            else:
+                cur.append(ch)
+        if cur:
+            parts.append("".join(cur))
+        return parts
+
+    if s.startswith("array<") and s.endswith(">"):
+        return T.ArrayType(_parse_simple_type(s[len("array<") : -1]))
+    if s.startswith("map<") and s.endswith(">"):
+        k, v = _split_top(s[len("map<") : -1])
+        return T.MapType(_parse_simple_type(k), _parse_simple_type(v))
+    if s.startswith("struct<") and s.endswith(">"):
+        fields = []
+        body = s[len("struct<") : -1]
+        for part in _split_top(body) if body else []:
+            name, _, typ = part.partition(":")
+            fields.append(
+                T.StructField(name.strip(), _parse_simple_type(typ), True)
+            )
+        return T.StructType(fields)
+    raise ValueError(f"cannot parse manifest schema type: {s!r}")
+
+
 def _merged_read_schema(head_m: dict, schema_v, mode: str):
     """simpleString of the table's READ schema after this commit — the
     by-name union parquet's ``mergeSchema`` would compute over the
@@ -329,8 +400,6 @@ def _merged_read_schema(head_m: dict, schema_v, mode: str):
     if not base:
         return None
     from pyspark.sql import types as T
-
-    from .cdf import _parse_simple_type
 
     try:
         bs = _parse_simple_type(base)
@@ -360,13 +429,52 @@ def _manifest_read_schema(manifest: dict):
         return None
     from pyspark.sql import types as T
 
-    from .cdf import _parse_simple_type
-
     try:
         struct = _parse_simple_type(rs)
     except (ValueError, RecursionError):
         return None
     return struct if isinstance(struct, T.StructType) else None
+
+
+def _manifest_feed_schema(base_dir: str, manifest: dict):
+    """The columns a change feed over this head manifest speaks, as a
+    ``StructType``, from manifests alone — the streaming source derives
+    its schema in a plan-time Python worker with no SparkContext.
+
+    The recorded read schema when there is one. Otherwise (manifests
+    older than ``read_schema``, partitioned tables, a read schema
+    dropped after type drift) the by-name union of the WRITTEN schemas
+    back to the last overwrite, in commit order — what ``mergeSchema``
+    computes over the version's dirs, so a narrower append drops no
+    column. ``None`` when manifests cannot prove it: a same-name type
+    conflict (``mergeSchema`` fails there) or a chain that ``vacuum``
+    cut before its overwrite."""
+    struct = _manifest_read_schema(manifest)
+    if struct is not None:
+        return struct
+    from pyspark.sql import types as T
+
+    chain, m = [manifest], manifest
+    while m.get("mode") != "overwrite" and m["version"] > 1:
+        try:
+            m = _read_manifest(base_dir, m["version"] - 1)
+        except FileNotFoundError:
+            return None
+        chain.append(m)
+    fields: dict = {}
+    for m in reversed(chain):
+        if not m.get("schema"):
+            continue  # a commit recording no frame adds no column
+        try:
+            written = _parse_simple_type(m["schema"])
+        except (ValueError, RecursionError):
+            return None
+        if not isinstance(written, T.StructType):
+            return None
+        for f in written.fields:
+            if fields.setdefault(f.name, f).dataType != f.dataType:
+                return None
+    return T.StructType(list(fields.values())) if fields else None
 
 
 def _rel_file_col(base_dir: str):
@@ -1049,7 +1157,7 @@ def merge_into_snapshot_delta(
         # caller meta first, stat keys LAST so a colliding caller key
         # can't make the manifest lie about the vector size (the
         # write_snapshot 'format'-last discipline — review r12; the
-        # broadcast decision in _deleted_rows reads n_deleted). When
+        # pipeline run report reads n_deleted). When
         # the caller carries no batch_id, the head's streaming high
         # watermark is preserved (re-read per retry) so vacuum after a
         # merge can't break snapshot_batch_sink's replay guard — the

@@ -6,6 +6,7 @@ boundary, and the apply-the-feed reconstruction invariant."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_etl_self_service_spark.sources import cdf as C
 from data_engineering_etl_self_service_spark.sources.snapshots import (
+    _manifest_path,
     compact_snapshot,
     delete_where,
     read_snapshot,
@@ -132,19 +134,25 @@ def _assert_parity(spark, batch_df, stream_df):
     assert b == s
 
 
-def test_stream_batch_parity_parquet_with_deletes(spark, tmp_path):
+def test_stream_batch_parity_parquet_with_deletes(
+    spark, tmp_path, assert_feed_replays
+):
     base = _mk(spark, tmp_path)
     delete_where(spark, base, "id % 10 = 0")
     compact_snapshot(spark, base)
     stream = _stream_all(spark, base, tmp_path, "p")
     _assert_parity(spark, C.changes_between(spark, base), stream)
+    assert_feed_replays(base, stream)
 
 
-def test_stream_batch_parity_orc_with_restatement(spark, tmp_path):
+def test_stream_batch_parity_orc_with_restatement(
+    spark, tmp_path, assert_feed_replays
+):
     base = _mk(spark, tmp_path, fmt="orc")
     write_snapshot(_df(spark, 200, 220), base, mode="overwrite", format="orc")
     stream = _stream_all(spark, base, tmp_path, "o")
     _assert_parity(spark, C.changes_between(spark, base), stream)
+    assert_feed_replays(base, stream)
     assert _counts(stream) == {
         ("insert", 1): 100,
         ("insert", 2): 50,
@@ -231,7 +239,7 @@ def test_history_expiry_is_loud_for_caught_up_consumers(spark, tmp_path):
 
 
 def test_hive_partitioned_snapshot_streams_partition_columns(
-    spark, tmp_path
+    spark, tmp_path, assert_feed_replays
 ):
     base = str(tmp_path / "tbl")
     write_snapshot(
@@ -242,13 +250,16 @@ def test_hive_partitioned_snapshot_streams_partition_columns(
     )
     stream = _stream_all(spark, base, tmp_path, "hive")
     _assert_parity(spark, C.changes_between(spark, base), stream)
+    assert_feed_replays(base, stream)
     # the path-encoded column really came back typed and valued
     assert stream.filter(F.col("grp") == 3).count() == read_snapshot(
         spark, base
     ).filter(F.col("grp") == 3).count()
 
 
-def test_schema_drift_nulls_in_old_versions(spark, tmp_path):
+def test_schema_drift_nulls_in_old_versions(
+    spark, tmp_path, assert_feed_replays
+):
     base = str(tmp_path / "tbl")
     write_snapshot(spark.range(10).select("id"), base, mode="overwrite")
     write_snapshot(
@@ -258,7 +269,146 @@ def test_schema_drift_nulls_in_old_versions(spark, tmp_path):
     )
     stream = _stream_all(spark, base, tmp_path, "drift")
     _assert_parity(spark, C.changes_between(spark, base), stream)
+    assert_feed_replays(base, stream)
     assert stream.filter(F.col("tag").isNull()).count() == 10
+
+
+def _narrowing_append(spark, tmp_path):
+    """v1 overwrites (id, a, b); v2 appends the narrower (id, a)."""
+    base = str(tmp_path / "narrow")
+    write_snapshot(
+        spark.createDataFrame(
+            [(1, "x", 1.5), (2, "y", 2.5)], "id long, a string, b double"
+        ),
+        base,
+        mode="overwrite",
+    )
+    write_snapshot(
+        spark.createDataFrame([(3, "z")], "id long, a string"),
+        base,
+        mode="append",
+    )
+    return base
+
+
+def test_narrower_append_keeps_columns_on_both_faces(
+    spark, tmp_path, assert_feed_replays
+):
+    """Both faces speak the table's read schema: a narrower append
+    (the head manifest's WRITTEN schema lacks ``b``) must not drop
+    ``b`` from the feed — the appended row carries it as null."""
+    base = _narrowing_append(spark, tmp_path)
+    batch = C.changes_between(spark, base)
+    assert batch.columns == ["id", "a", "b", "change_type", "version"]
+    assert batch.filter(F.col("version") == 2).collect() == [
+        (3, "z", None, "insert", 2)
+    ]
+    stream = _stream_all(spark, base, tmp_path, "narrow")
+    _assert_parity(spark, batch, stream)
+    assert_feed_replays(base, stream)
+
+
+def test_replica_keeps_columns_after_narrower_append(spark, tmp_path):
+    src = _narrowing_append(spark, tmp_path)
+    dst = str(tmp_path / "replica")
+    C.replicate_snapshot(
+        spark, src, dst, str(tmp_path / "ck_narrow"), key_cols=["id"]
+    )
+    got = read_snapshot(spark, dst)
+    assert sorted(got.columns) == ["a", "b", "id"]
+    assert sorted(tuple(r) for r in got.select("id", "a", "b").collect()) == [
+        (1, "x", 1.5),
+        (2, "y", 2.5),
+        (3, "z", None),
+    ]
+
+
+def _strip_read_schema(base):
+    """Rewrite every manifest as a writer from before ``read_schema``
+    existed left it: written schema only."""
+    for v in snapshot_versions(base):
+        path = _manifest_path(base, v)
+        with open(path) as f:
+            m = json.load(f)
+        m.pop("read_schema", None)
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+
+def test_narrower_append_without_read_schema_keeps_columns(
+    spark, tmp_path, assert_feed_replays
+):
+    """Legacy manifests record only each commit's WRITTEN schema; both
+    faces union them back to the overwrite, as mergeSchema would, so
+    ``b`` survives the narrower append there too."""
+    base = _narrowing_append(spark, tmp_path)
+    _strip_read_schema(base)
+    batch = C.changes_between(spark, base)
+    assert batch.columns == ["id", "a", "b", "change_type", "version"]
+    assert batch.filter(F.col("version") == 2).collect() == [
+        (3, "z", None, "insert", 2)
+    ]
+    stream = _stream_all(spark, base, tmp_path, "legacy")
+    _assert_parity(spark, batch, stream)
+    assert_feed_replays(base, stream)
+
+
+def test_legacy_chain_cut_by_vacuum_reads_columns_from_data(spark, tmp_path):
+    """When vacuum removed the legacy chain's overwrite, manifests no
+    longer name every column; the batch face asks mergeSchema."""
+    base = _narrowing_append(spark, tmp_path)
+    write_snapshot(
+        spark.createDataFrame([(4, "w")], "id long, a string"),
+        base,
+        mode="append",
+    )
+    _strip_read_schema(base)
+    vacuum(base, keep_last=1)
+    feed = C.changes_between(spark, base)
+    assert feed.columns == ["id", "a", "b", "change_type", "version"]
+    assert sorted(tuple(r) for r in feed.select("id", "b").collect()) == [
+        (1, 1.5),
+        (2, 2.5),
+        (3, None),
+        (4, None),
+    ]
+
+
+def test_stream_source_payload_does_not_reach_read_snapshot(monkeypatch):
+    """The streaming source ships to Python workers pickled by value; a
+    wrapper around ``read_snapshot`` (as a tracer installs) must not
+    ride along, or the workers fail to import the wrapper's module."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    class _Unshippable:
+        def __reduce__(self):
+            raise pickle.PicklingError("read_snapshot reached the payload")
+
+    monkeypatch.setattr(C, "read_snapshot", _Unshippable())
+    C._ensure_pickle_by_value()
+    cloudpickle.dumps(C.SnapshotCDFDataSource)
+
+
+def test_type_drift_without_read_schema_fails_like_read_snapshot(
+    spark, tmp_path
+):
+    base = str(tmp_path / "drift")
+    write_snapshot(
+        spark.createDataFrame([(1, "x")], "id long, a string"),
+        base,
+        mode="overwrite",
+    )
+    write_snapshot(
+        spark.createDataFrame([(2, 7)], "id long, a int"),
+        base,
+        mode="append",
+    )
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        read_snapshot(spark, base).limit(0).schema
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        C.changes_between(spark, base)
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +580,7 @@ def test_maxversionsperbatch_is_a_loud_non_feature(spark, tmp_path):
 
 
 def test_delete_vectors_on_partitioned_table_keep_partition_columns(
-    spark, tmp_path
+    spark, tmp_path, assert_feed_replays
 ):
     """delete_where works on hive-partitioned snapshots (the layout is
     overwrite-only, deletes are vectors) — the feed's delete rows must
@@ -443,13 +593,16 @@ def test_delete_vectors_on_partitioned_table_keep_partition_columns(
     batch = C.changes_between(spark, base, after_version=1)
     stream = _stream_all(spark, base, tmp_path, "pvec", startingversion="2")
     _assert_parity(spark, batch, stream)
+    assert_feed_replays(base, stream, after_version=1)
     rows = stream.collect()
     assert rows and all(
         r["change_type"] == "delete" and r["grp"] == 3 for r in rows
     )
 
 
-def test_dropped_column_speaks_head_schema_on_both_faces(spark, tmp_path):
+def test_dropped_column_speaks_head_schema_on_both_faces(
+    spark, tmp_path, assert_feed_replays
+):
     """A later overwrite that DROPS a column must not resurrect it in
     old versions' feed rows — the feed speaks the table's CURRENT
     schema (Delta CDF semantics), identically on both faces."""
@@ -466,6 +619,7 @@ def test_dropped_column_speaks_head_schema_on_both_faces(spark, tmp_path):
     assert set(batch.columns) == {"id", "change_type", "version"}
     stream = _stream_all(spark, base, tmp_path, "drop")
     _assert_parity(spark, batch, stream)
+    assert_feed_replays(base, stream)
 
 
 def test_replicate_snapshot_converges_through_all_change_kinds(

@@ -3,13 +3,15 @@
 update classification (`reconcile_updates` / `changes_between(key_cols)`
 — Delta CDF `update_preimage`/`update_postimage` semantics, parity with
 `snapshot_diff` pinned), the delta-apply replica whose per-batch write
-cost is proportional to the BATCH (byte/dir-counted), and the
-deep-history batch route whose plan is O(1) in version count."""
+cost is proportional to the BATCH (byte/dir-counted), and the batch
+feed's one per-file derivation: its plan is O(1) in version count,
+building it runs no Spark job, and it replays time travel exactly."""
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -525,18 +527,25 @@ def test_reserved_cdc_columns_are_loud(spark, tmp_path):
         )
 
 
-def test_batch_face_reads_absolute_key_vectors(spark, tmp_path):
+def test_batch_face_reads_absolute_key_vectors(
+    spark, tmp_path, assert_feed_replays
+):
     """ADVICE r11 low #1: delete vectors whose file keys are ABSOLUTE
     (symlink/mount spellings where neither root-strip fired) must read
-    on the BATCH face too — the key is not under basePath=base_dir, so
-    the pre-fix read raised AnalysisException. Fabricated by rewriting
-    a real vector's keys to absolute paths."""
+    on the BATCH face too, with the rows the relative-key vector
+    yields. Fabricated by rewriting a real vector's keys to absolute
+    paths; the reference is the feed over the original vector, checked
+    against time travel before the rewrite (read_snapshot strips the
+    root from its own keys, so it cannot read the rewritten vector)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     base = str(tmp_path / "tbl")
     write_snapshot(_df(spark, 0, 40), base, mode="overwrite")  # v1
     delete_where(spark, base, "id % 4 = 0")  # v2: 10 rows
+    ref = C.changes_between(spark, base, after_version=1)
+    assert_feed_replays(base, ref, after_version=1)
+    ref_rows = sorted(tuple(r) for r in ref.collect())
     m = _read_manifest(base, 2)
     vdir = os.path.join(base, m["delete_dirs"][0])
     for name in os.listdir(vdir):
@@ -562,10 +571,7 @@ def test_batch_face_reads_absolute_key_vectors(spark, tmp_path):
     got = sorted(r["id"] for r in batch.collect())
     assert got == list(range(0, 40, 4))
     assert {r["change_type"] for r in batch.collect()} == {"delete"}
-    # stream parity on the same absolute-key vector
-    stream = C.changes_between(spark, base, after_version=1,
-                               max_union_versions=0)
-    assert sorted(r["id"] for r in stream.collect()) == got
+    assert sorted(tuple(r) for r in batch.collect()) == ref_rows
 
 
 def test_merge_meta_cannot_override_stats_and_carries_batch_id(
@@ -708,7 +714,7 @@ def test_merge_type_drift_is_a_loud_boundary(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# deep histories: bounded plan via the per-file batch route
+# the one derivation: bounded plan, no build jobs, time-travel replay
 # ---------------------------------------------------------------------------
 
 
@@ -757,11 +763,11 @@ def _fabricate_history(tmp_path, n_versions, rows_per_version=5):
 def test_deep_history_routes_through_one_mapinarrow_node(spark, tmp_path):
     n = 500
     base = _fabricate_history(tmp_path, n)
-    feed = C.changes_between(spark, base)  # auto-routes: 500 > 64
+    feed = C.changes_between(spark, base)
     plan = feed._jdf.queryExecution().analyzed().toString()
     assert "MapInArrow" in plan
-    # bounded: the union route grows ~one scan per version; this plan
-    # must not scale with version count at all
+    # bounded: one scan per version would grow the plan with history
+    # depth; this plan must not scale with version count at all
     assert len(plan) < 20_000
     got = feed.groupBy("version").agg(F.count("*").alias("n")).collect()
     assert len(got) == n and all(r["n"] == 5 for r in got)
@@ -773,13 +779,17 @@ def test_deep_history_routes_through_one_mapinarrow_node(spark, tmp_path):
     assert v137 == list(range(136 * 5, 137 * 5))
 
 
-def test_file_route_parity_with_union_route(spark, tmp_path):
-    """Forcing the per-file route (max_union_versions=0) reproduces the
-    union route exactly — appends, deletes, restatement, hive
-    partitions, schema drift in one table."""
-    base = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 60), base, mode="overwrite")  # v1
-    write_snapshot(_df(spark, 60, 80), base, mode="append")  # v2
+def _five_version_table(spark, base, fmt="parquet"):
+    """v1 overwrite, v2 append, v3 delete vector, v4 restatement, v5
+    delta merge with a tombstone (parquet; ORC has no vectors, so the
+    ORC shape stops at the restatement)."""
+    write_snapshot(_df(spark, 0, 60), base, mode="overwrite", format=fmt)
+    write_snapshot(_df(spark, 60, 80), base, mode="append", format=fmt)
+    if fmt == "orc":
+        write_snapshot(
+            _df(spark, 200, 220), base, mode="overwrite", format=fmt
+        )
+        return base
     delete_where(spark, base, "id % 9 = 0")  # v3
     write_snapshot(_df(spark, 200, 230), base, mode="overwrite")  # v4
     updates = spark.createDataFrame(
@@ -787,17 +797,31 @@ def test_file_route_parity_with_union_route(spark, tmp_path):
         "id long, grp long, name string, dead boolean",
     )
     merge_into_snapshot_delta(spark, base, updates, ["id"], delete_col="dead")
-    union = C.changes_between(spark, base)
-    files = C.changes_between(spark, base, max_union_versions=0)
-    cols = sorted(union.columns)
-    assert [f.name for f in files.schema] == [f.name for f in union.schema]
-    assert sorted(tuple(r) for r in files.select(*cols).collect()) == sorted(
-        tuple(r) for r in union.select(*cols).collect()
-    )
-    # keyed classification composes with the file route too
-    keyed = C.changes_between(
-        spark, base, after_version=4, key_cols=["id"], max_union_versions=0
-    )
+    return base
+
+
+def test_feed_replays_time_travel_through_all_change_kinds(
+    spark, tmp_path, assert_feed_replays
+):
+    """Replaying the feed over each version's parent reproduces that
+    version's time-travel read — appends, a delete vector, a
+    restatement and a delta merge with a tombstone in one table — and
+    windows that start and end mid-history replay too."""
+    base = _five_version_table(spark, str(tmp_path / "tbl"))
+    feed = C.changes_between(spark, base)
+    assert [f.name for f in feed.schema] == [
+        "id", "grp", "name", "change_type", "version"
+    ]
+    assert_feed_replays(base, feed)
+    for lo, hi in ((1, 3), (2, 4), (3, 5)):
+        assert_feed_replays(
+            base,
+            C.changes_between(spark, base, after_version=lo, to_version=hi),
+            after_version=lo,
+            to_version=hi,
+        )
+    # keyed classification composes with the one derivation
+    keyed = C.changes_between(spark, base, after_version=4, key_cols=["id"])
     got = sorted((r["change_type"], r["id"]) for r in keyed.collect())
     assert got == [
         ("delete", 202),
@@ -806,20 +830,37 @@ def test_file_route_parity_with_union_route(spark, tmp_path):
     ]
 
 
-def test_file_route_parity_on_orc(spark, tmp_path):
-    """The per-file batch route decodes ORC data files too (the format
-    rides the manifest into each partition spec) — parity with the
-    union route across appends and a restatement."""
-    base = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 50), base, mode="overwrite", format="orc")
-    write_snapshot(_df(spark, 50, 70), base, mode="append", format="orc")
-    write_snapshot(
-        _df(spark, 200, 220), base, mode="overwrite", format="orc"
-    )
-    union = C.changes_between(spark, base)
-    files = C.changes_between(spark, base, max_union_versions=0)
-    cols = sorted(union.columns)
-    assert sorted(tuple(r) for r in files.select(*cols).collect()) == sorted(
-        tuple(r) for r in union.select(*cols).collect()
-    )
-    assert "MapInArrow" in files._jdf.queryExecution().analyzed().toString()
+def test_feed_replays_time_travel_on_orc(spark, tmp_path, assert_feed_replays):
+    """ORC data files decode on the per-file route too (the format
+    rides the manifest into each partition spec) — the feed replays
+    time travel across appends and a restatement."""
+    base = _five_version_table(spark, str(tmp_path / "tbl"), fmt="orc")
+    feed = C.changes_between(spark, base)
+    assert_feed_replays(base, feed)
+    assert "MapInArrow" in feed._jdf.queryExecution().analyzed().toString()
+
+
+def test_building_the_feed_launches_no_spark_job(spark, tmp_path):
+    """Planning reads manifests and lists files on the driver; every
+    data read happens inside the one mapInArrow node when the feed
+    executes — building it, keyed or not, runs no Spark job, and a
+    1-version range plans as the same single node a 500-version
+    range does."""
+    base = _five_version_table(spark, str(tmp_path / "tbl"))
+    sc = spark.sparkContext
+    group = f"test_cdf_keyed-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        feeds = [
+            C.changes_between(spark, base),
+            C.changes_between(spark, base, key_cols=["id"]),
+            C.changes_between(spark, base, after_version=1, to_version=2),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    one = feeds[2]._jdf.queryExecution().analyzed().toString()
+    assert one.count("MapInArrow") == 1
+    assert sorted(r["id"] for r in feeds[2].collect()) == list(range(60, 80))

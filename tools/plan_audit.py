@@ -38,6 +38,7 @@ INTERESTING = (
     "ReusedExchange",
     "InMemoryTableScan",
     "Scan parquet",
+    "MapInArrow",
 )
 
 
