@@ -260,6 +260,23 @@ def minhash_lsh_pairs(
 
     Output: (doc_a, doc_b, jaccard) — same contract as :func:`jaccard_pairs`.
     """
+    candidates = _minhash_lsh_candidates(
+        docs, text_col, id_col, k, num_hashes, bands, max_bucket_size
+    )
+    return _verify_jaccard(docs, candidates, text_col, id_col, k, threshold)
+
+
+def _minhash_lsh_candidates(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """The unverified ``(doc_a, doc_b)`` candidate pairs of
+    :func:`minhash_lsh_pairs`: every pair sharing a band bucket."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
 
@@ -318,7 +335,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    return _verify_jaccard(docs, candidates, text_col, id_col, k, threshold)
+    return candidates
 
 
 def _verify_jaccard(
@@ -328,20 +345,26 @@ def _verify_jaccard(
     id_col: str,
     k: int,
     threshold: float,
+    eager: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard verification of a (doc_a, doc_b) candidate set.
 
     Shingles are recomputed for the candidate docs only (broadcast
     semi-join prunes the corpus scan); set semantics (distinct) are
     restored HERE, on the tiny slice only. Output: (doc_a, doc_b, jaccard)
-    filtered to ≥ threshold.
+    filtered to ≥ threshold. ``eager=False`` returns the same plan
+    without the persists and the final materialization.
     """
-    candidates = F.broadcast(candidates.persist())
+    if eager:
+        candidates = candidates.persist()
+    candidates = F.broadcast(candidates)
     cand_ids = candidates.select(
         F.explode(F.array("doc_a", "doc_b")).alias(id_col)
     ).distinct()
     cdocs = docs.join(F.broadcast(cand_ids), id_col, "left_semi")
-    csh = _hashed_shingle_table(cdocs, text_col, id_col, k, distinct=True).persist()
+    csh = _hashed_shingle_table(cdocs, text_col, id_col, k, distinct=True)
+    if eager:
+        csh = csh.persist()
     sizes = csh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = csh.alias("a"), csh.alias("b")
     inter = (
@@ -367,6 +390,8 @@ def _verify_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
+    if not eager:
+        return out
     out = out.transform(truncate_lineage)  # tiny; frees both caches
     candidates.unpersist()
     csh.unpersist()

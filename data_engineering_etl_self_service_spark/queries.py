@@ -964,6 +964,17 @@ def minhash_lsh_dedup(spark, sf_dir):
     return minhash_lsh_pairs(d, k=3, threshold=0.8, num_hashes=96, bands=24)
 
 
+def _minhash_lsh_dedup_plan(spark, sf_dir):
+    from .operators.dedup import _minhash_lsh_candidates, _verify_jaccard
+
+    d = _t(spark, sf_dir, "documents")
+    cands = _minhash_lsh_candidates(d, "text", "doc_id", 3, 96, 24, None)
+    return _verify_jaccard(d, cands, "text", "doc_id", 3, 0.8, eager=False)
+
+
+PLAN_VIEWS["minhash_lsh_dedup"] = _minhash_lsh_dedup_plan
+
+
 @register(
     "minhash_incremental_dedup",
     """

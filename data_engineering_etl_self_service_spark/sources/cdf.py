@@ -21,13 +21,15 @@ and speak the head manifest's columns (:func:`_feed_struct`).
   under a single ``mapInArrow`` node (building it launches no Spark
   job; the plan does not grow with history depth).
 - ``spark.readStream.format("snapshot_cdf").option("path", dir)`` — a
-  PySpark-4 Python STREAMING data source whose input partitions are
-  those specs. Offsets are committed version numbers, so Spark's own
-  checkpoint makes the tail crash-resumable (the offset log persists
-  the last-emitted version — the read-side mirror of
-  ``snapshot_batch_sink``'s batch_id guard);
-  ``trigger(availableNow=True)`` drains everything committed and
-  stops.
+  PySpark-4 Python STREAMING data source for streaming consumers,
+  whose input partitions are those specs. Offsets are committed
+  version numbers, so the consuming query's checkpoint makes its tail
+  crash-resumable; ``trigger(availableNow=True)`` drains everything
+  committed and stops.
+
+The replica applier (:func:`replicate_snapshot`) runs no stream: it
+drains the batch face and records its feed position in the replica's
+own manifest, in the same commit as the rows it applies.
 
 Change derivation per committed version (manifest modes):
 
@@ -224,8 +226,8 @@ def reconcile_updates(df: DataFrame, key_cols: list[str]) -> DataFrame:
     output, or each micro-batch of the streaming source inside
     ``foreachBatch`` (the per-FILE streaming partitions cannot pair
     rows across files, so keyed classification is a one-join batch
-    transform by design — see ``replicate_snapshot`` for the apply
-    side).
+    transform by design — :func:`feed_actions` and
+    :func:`replicate_snapshot` are the apply side).
 
     ``key_cols`` must uniquely identify rows within one version.
     Rows with a NULL key never pair (SQL equality): they surface as
@@ -787,8 +789,8 @@ try:  # pragma: no cover - import surface depends on pyspark minor version
                     "snapshot_cdf does not classify keyed updates at "
                     "the source (per-file partitions cannot pair rows "
                     "across files). Apply reconcile_updates(batch, "
-                    "key_cols) inside foreachBatch — see "
-                    "replicate_snapshot for the apply-side recipe — "
+                    "key_cols) inside foreachBatch (feed_actions + "
+                    "merge_into_snapshot_delta is the apply recipe) — "
                     "or use changes_between(key_cols=...) for "
                     "batch/backfill reads."
                 )
@@ -933,94 +935,79 @@ def replicate_snapshot(
     checkpoint_dir: str,
     key_cols: list[str],
 ) -> None:
-    """Maintain ``dst_dir`` as a REPLICA of ``src_dir`` by tailing its
+    """Maintain ``dst_dir`` as a REPLICA of ``src_dir`` by draining its
     change feed — the apply side of CDC, closing the loop the
     reference's Kafka consumer only gestured at (ref:
     dags/kafka_stream.py:87-92 recovered): downstream stays convergent
     through appends, row-level deletes, AND full restatements, with
-    exactly-once application across restarts (Spark's checkpoint
-    carries the feed position; the replica's manifest ``batch_id``
-    guard drops replayed batches, the ``snapshot_batch_sink`` recipe).
+    exactly-once application across restarts.
+
+    The feed position lives in the replica's own manifests, not in a
+    Spark checkpoint: each drain commits ``feed_position = {"consumer":
+    checkpoint_dir, "version": <upstream version applied>}`` in the
+    SAME exclusive-create manifest as the data it applies, so data and
+    position land together or not at all. A crash before that commit
+    leaves the replica head unchanged (the staged dirs are orphans
+    for ``vacuum``) and the next drain re-reads the same range.
+    ``checkpoint_dir`` is only the consumer's id: nothing is written
+    under it. Replica maintenance and ``vacuum(keep_last=1)`` carry
+    the position forward (``snapshots._progress``).
+
+    A drain reads the batch feed (:func:`changes_between`) from the
+    recorded position to the upstream head and folds it to ONE action
+    per key (:func:`feed_actions`: same-version delete+insert pairs
+    reconcile into updates, rows a restatement carried through
+    unchanged drop, latest version wins), then applies it in one pass
+    as a DELTA merge (``merge_into_snapshot_delta``): tombstones and
+    replaced rows die via a position-delete vector, new/changed rows
+    land as one appended dir — write cost proportional to the change,
+    never a rewrite of the replica. With no replica yet, or a position
+    recorded under a different ``checkpoint_dir``, the drain is a
+    (re-)sync instead: the replica is overwritten from the feed since
+    the upstream's beginning (an initial snapshot when history
+    expired), because stale local rows can't be trusted there. A drain
+    with no new upstream versions commits nothing; neither does one
+    whose new versions fold to no row change (its position then stays,
+    and the next drain re-reads those versions).
 
     ``key_cols`` must uniquely identify upstream rows (replication is
-    keyed application; a key-less multiset has no well-defined replica
-    under out-of-order batch folding). Each micro-batch first
-    reconciles same-version delete+insert pairs into update rows
-    (:func:`reconcile_updates` — unchanged restated rows drop here,
-    so a 100-row restatement diff costs 100 rows, not the table),
-    then reduces to ONE action per key (latest version wins) and
-    applies in one pass as a DELTA merge
-    (``merge_into_snapshot_delta``, round 12 — VERDICT r11 #1):
-    tombstones and replaced rows die via a position-delete vector,
-    new/changed rows land as one appended dir — per-batch write cost
-    proportional to the BATCH, never a rewrite of the replica (the
-    r11 applier's whole-table copy-on-write overwrite is gone). Only
-    batch 0 of a fresh checkpoint — a (re-)sync — restates the
-    replica by full overwrite, because stale local rows can't be
-    trusted there. Replica maintenance is the standard pair:
+    keyed application; a key-less multiset has no well-defined
+    replica). Replica maintenance is the standard set:
     ``materialize_deletes`` folds accumulated vectors,
-    ``compact_snapshot`` merges batch dirs; both are
-    maintenance-silent in the replica's own change feed. Drains
-    everything committed and returns (``availableNow``); call again
-    to catch up."""
+    ``compact_snapshot``/``compact_small_dirs`` merge dirs; all are
+    silent in the replica's own change feed."""
     from pyspark.sql import functions as F
 
     from .snapshots import (
-        last_committed_batch,
+        _progress,
         merge_into_snapshot_delta,
         write_snapshot,
     )
 
-    register_snapshot_cdf(spark)
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        # replay guard — EXCEPT for batch 0: batch ids restart per
-        # checkpoint, so a re-sync under a fresh checkpoint always
-        # arrives as batch 0 and a guard keyed on the old run's ids
-        # would silently skip it (leaving the replica stale forever).
-        # Batch 0 is safe unguarded: it applies as a full restatement
-        # (overwrite of the replica from the batch alone), which is
-        # idempotent under crash-replay.
-        last = last_committed_batch(dst_dir)
-        if batch_id > 0 and last is not None and batch_id <= last:
-            return  # replayed epoch — already durable
-        # keyed classification + fold: restatement pairs become one
-        # update action, rows a restatement carried through UNCHANGED
-        # vanish before they can cost a single write, latest version
-        # wins per key (feed_actions — shared with the YAML
-        # snapshot_merge destination's apply_feed mode)
-        act = feed_actions(batch, key_cols)
-        if batch_id == 0 or not snapshot_versions(dst_dir):
-            # batch 0 is the first batch of a FRESH checkpoint — a
-            # (re-)sync whose feed starts from the consumer's declared
-            # beginning (an initial snapshot when history expired).
-            # Folding it into pre-existing replica state would keep
-            # stale rows the expired window deleted upstream; the
-            # replica restates from the batch alone.
-            new = act.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
-            write_snapshot(
-                new, dst_dir, mode="overwrite", meta={"batch_id": batch_id}
-            )
-        else:
-            merge_into_snapshot_delta(
-                spark,
-                dst_dir,
-                act,
-                key_cols,
-                delete_col=TOMBSTONE_COL,
-                meta={"batch_id": batch_id},
-            )
-
-    q = (
-        spark.readStream.format("snapshot_cdf")
-        .option("path", src_dir)
-        .load()
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    versions = snapshot_versions(src_dir)
+    if not versions:
+        raise FileNotFoundError(f"no snapshots at {src_dir}")
+    head = versions[-1]
+    pos = _progress(dst_dir, ("feed_position",)).get("feed_position")
+    resume = pos is not None and pos["consumer"] == checkpoint_dir
+    if resume and pos["version"] >= head:
+        return
+    act = feed_actions(
+        changes_between(spark, src_dir, pos["version"] if resume else 0, head),
+        key_cols,
     )
-    q.awaitTermination()
+    meta = {"feed_position": {"consumer": checkpoint_dir, "version": head}}
+    if resume:
+        merge_into_snapshot_delta(
+            spark, dst_dir, act, key_cols, delete_col=TOMBSTONE_COL, meta=meta
+        )
+    else:
+        write_snapshot(
+            act.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL),
+            dst_dir,
+            mode="overwrite",
+            meta=meta,
+        )
 
 
 def register_snapshot_cdf(spark: SparkSession) -> bool:

@@ -508,6 +508,17 @@ _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
 
 
+def _read_vectors(
+    spark: SparkSession, base_dir: str, dirs: list[str]
+) -> DataFrame:
+    """Position-delete vector rows ``(file, pos)`` under ``dirs``
+    (relative to the table), read with the one schema every vector
+    writer produces — no schema-inference job per read."""
+    return spark.read.schema("file string, pos long").parquet(
+        *[os.path.join(base_dir, d) for d in dirs]
+    )
+
+
 def _lineage_read(
     spark: SparkSession, base_dir: str, manifest: dict
 ) -> DataFrame:
@@ -545,9 +556,7 @@ def _lineage_read(
     )
     del_dirs = manifest.get("delete_dirs") or []
     if del_dirs:
-        dels = spark.read.parquet(
-            *[os.path.join(base_dir, d) for d in del_dirs]
-        ).select("file", "pos")
+        dels = _read_vectors(spark, base_dir, del_dirs)
         if manifest.get("delete_rows", 0) <= _BROADCAST_DELETE_ROWS:
             from pyspark.sql.functions import broadcast
 
@@ -583,7 +592,17 @@ def read_snapshot(
     Versions carrying position deletes (:func:`delete_where`) apply
     them transparently; versions without any keep the plain-scan fast
     path (no metadata columns, no join in the plan)."""
-    manifest = _head_manifest(base_dir, version)
+    return _read_manifest_data(
+        spark, base_dir, _head_manifest(base_dir, version)
+    )
+
+
+def _read_manifest_data(
+    spark: SparkSession, base_dir: str, manifest: dict
+) -> DataFrame:
+    """The visible rows of ``manifest``'s data dirs, vectors applied:
+    :func:`read_snapshot`'s body, also fed a subset of a version's
+    dirs by :func:`compact_small_dirs`."""
     if manifest.get("delete_dirs"):
         return _lineage_read(spark, base_dir, manifest).drop(
             _DV_FILE, _DV_POS
@@ -750,12 +769,8 @@ def delete_where(
             d for d in dels if d not in planned_dels and d != state["rel"]
         ]
         if extra:
-            mine = spark.read.parquet(
-                os.path.join(base_dir, state["rel"])
-            ).select("file", "pos")
-            theirs = spark.read.parquet(
-                *[os.path.join(base_dir, d) for d in extra]
-            ).select("file", "pos")
+            mine = _read_vectors(spark, base_dir, [state["rel"]])
+            theirs = _read_vectors(spark, base_dir, extra)
             deduped = mine.join(theirs, ["file", "pos"], "left_anti")
             new_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
             deduped.write.mode("error").parquet(
@@ -853,14 +868,31 @@ def vacuum(
     return deleted
 
 
+#: consumer-progress keys a manifest may carry: a streaming sink's
+#: ``batch_id`` (:func:`snapshot_batch_sink`) and a replica's change-feed
+#: ``feed_position`` (``sources/cdf.py replicate_snapshot``). Merges and
+#: maintenance commits that do not set them republish the newest
+#: recorded values (:func:`_progress`), so neither maintenance nor
+#: ``vacuum(keep_last=1)`` loses a consumer's place.
+_PROGRESS_KEYS = ("batch_id", "feed_position")
+
+
+def _progress(base_dir: str, keys: tuple = _PROGRESS_KEYS) -> dict:
+    """The newest recorded value of each progress key in ``keys``
+    (newest manifest first; stops once every key is found)."""
+    out: dict = {}
+    for v in reversed(snapshot_versions(base_dir)):
+        m = _read_manifest(base_dir, v)
+        out.update({k: m[k] for k in keys if k in m and k not in out})
+        if len(out) == len(keys):
+            break
+    return out
+
+
 def last_committed_batch(base_dir: str) -> int | None:
     """Highest streaming ``batch_id`` recorded in any manifest (newest
     first — stops at the first manifest that carries one)."""
-    for v in reversed(snapshot_versions(base_dir)):
-        m = _read_manifest(base_dir, v)
-        if "batch_id" in m:
-            return m["batch_id"]
-    return None
+    return _progress(base_dir, ("batch_id",)).get("batch_id")
 
 
 def snapshot_batch_sink(
@@ -949,18 +981,14 @@ def merge_into_snapshot(
         .filter((F.col("_rn") == 1) & (~F.col("_del")))
         .drop("_v", "_del", "_rn")
     )
-    # Maintenance must not lose the streaming high watermark: carry the max
-    # committed batch_id into the new head manifest so a later
-    # vacuum(keep_last=1) can't break snapshot_batch_sink's replay guard.
-    meta = None
-    last = last_committed_batch(base_dir)
-    if last is not None:
-        meta = {"batch_id": last}
+    # Maintenance must not lose a consumer's progress: carry it into the
+    # new head manifest so a later vacuum(keep_last=1) can't break
+    # snapshot_batch_sink's replay guard or a replica's feed position.
     return write_snapshot(
         merged,
         base_dir,
         mode="overwrite",
-        meta=meta,
+        meta=_progress(base_dir),
         format=_table_format(_head_manifest(base_dir)),
     )
 
@@ -1128,12 +1156,8 @@ def merge_into_snapshot_delta(
             d for d in dels if d not in planned_dels and d != state["rel"]
         ]
         if extra:
-            mine = spark.read.parquet(
-                os.path.join(base_dir, state["rel"])
-            ).select("file", "pos")
-            theirs = spark.read.parquet(
-                *[os.path.join(base_dir, d) for d in extra]
-            ).select("file", "pos")
+            mine = _read_vectors(spark, base_dir, [state["rel"]])
+            theirs = _read_vectors(spark, base_dir, extra)
             deduped = mine.join(theirs, ["file", "pos"], "left_anti")
             new_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
             deduped.write.mode("error").parquet(
@@ -1157,16 +1181,11 @@ def merge_into_snapshot_delta(
         # caller meta first, stat keys LAST so a colliding caller key
         # can't make the manifest lie about the vector size (the
         # write_snapshot 'format'-last discipline — review r12; the
-        # pipeline run report reads n_deleted). When
-        # the caller carries no batch_id, the head's streaming high
-        # watermark is preserved (re-read per retry) so vacuum after a
-        # merge can't break snapshot_batch_sink's replay guard — the
-        # merge_into_snapshot rule.
-        out = dict(meta or {})
-        if "batch_id" not in out:
-            last = last_committed_batch(base_dir)
-            if last is not None:
-                out["batch_id"] = last
+        # pipeline run report reads n_deleted). Progress keys the
+        # caller does not set are carried from the head (re-read per
+        # retry) so vacuum after a merge can't lose a consumer's
+        # place — the merge_into_snapshot rule.
+        out = {**_progress(base_dir), **(meta or {})}
         out["n_deleted"] = state["n"]
         out["n_inserted"] = n_ins
         return out
@@ -1262,22 +1281,16 @@ def materialize_deletes(
     spill_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
     spill = os.path.join(base_dir, spill_rel)
     (
-        spark.read.parquet(
-            *[os.path.join(base_dir, d) for d in head_dels]
-        )
-        .select("file", "pos")
+        _read_vectors(spark, base_dir, head_dels)
         .dropDuplicates(["file", "pos"])
         .write.mode("error")
         .parquet(spill)
     )
-    dels = spark.read.parquet(spill)
+    dels = _read_vectors(spark, base_dir, [spill_rel])
     try:
-        # dir attribution from the vector key itself: keys are
-        # 'data/<uuid>/...' (relative) or absolute with '/data/<uuid>/'
-        # inside — the extract handles both
-        dir_of = F.regexp_extract(
-            F.col("file"), r"(?:^|/)(data/[^/]+)/", 1
-        )
+        # dir attribution from the vector key itself, relative or
+        # absolute (_data_dir_of handles both)
+        dir_of = _data_dir_of(F.col("file"))
         del_by_dir = {
             r["d"]: r["n"]
             for r in dels.groupBy(dir_of.alias("d"))
@@ -1361,13 +1374,12 @@ def materialize_deletes(
                 )
             return [swap.get(d, d) for d in cur]
 
-        last = last_committed_batch(base_dir)
         return _commit_manifest(
             base_dir,
             _dirs,
             "materialize",
             head.get("schema"),
-            {"batch_id": last} if last is not None else None,
+            _progress(base_dir),
             deletes_of_head=_dels,
         )
     finally:
@@ -1384,10 +1396,11 @@ def compact_snapshot(
     version list one. Pair with :func:`vacuum` to reclaim the old dirs
     once no retained version references them.
 
-    The new manifest carries forward the max streaming ``batch_id`` of the
-    table, so the compact→vacuum maintenance pair (the CLI's
-    ``optimize --snapshot``) preserves :func:`last_committed_batch` and
-    the exactly-once replay guard of :func:`snapshot_batch_sink`.
+    The new manifest carries forward the table's consumer progress
+    (:func:`_progress`), so the compact→vacuum maintenance pair (the
+    CLI's ``optimize --snapshot``) preserves :func:`last_committed_batch`
+    (the exactly-once replay guard of :func:`snapshot_batch_sink`) and
+    a replica's feed position.
 
     The commit is tagged ``maintenance: true`` (round 11): it rewrites
     layout, never logical content, so the change feed
@@ -1397,70 +1410,31 @@ def compact_snapshot(
     df = read_snapshot(spark, base_dir)
     if target_files is not None:
         df = df.coalesce(int(target_files))
-    meta: dict = {"maintenance": True}
-    last = last_committed_batch(base_dir)
-    if last is not None:
-        meta["batch_id"] = last
     return write_snapshot(
         df,
         base_dir,
         mode="overwrite",
-        meta=meta,
+        meta={"maintenance": True, **_progress(base_dir)},
         format=_table_format(_head_manifest(base_dir)),
     )
 
 
-def _orc_leaf_audit(
-    spark: SparkSession,
-    paths: list[str],
-    label_root: str,
-    small_file_bytes: int,
-):
-    """ORC face of the ``lake_audit_report`` slice the snapshot
-    compactor consumes: one row per LEAF directory label with
-    ``(n_files, total_rows, total_bytes, small_file_flag)``, from tail
-    bytes only (executor-side :func:`orc_meta.read_orc_tail` through
-    the same ranged-read layer as every other audit). Majority-small
-    is the flag rule, matching the parquet audit."""
+def _data_dir_of(key):
+    """The ``data/<uuid>`` dir a data-file key (a vector's ``file``, or
+    :func:`_rel_file_col`) names, relative or absolute: the LAST
+    ``data/<name>`` segment followed only by hive ``k=v`` segments and
+    the file name, so a table under a path that itself contains
+    ``/data/`` still attributes right. ``''`` when the key has no
+    such shape."""
     from pyspark.sql import functions as F
 
-    from ..operators.orc_meta import _orc_listing, read_orc_tail
-    from ..operators.parquet_meta import (
-        _footer_frame,
-        _rel_label,
-        _root_norm,
+    return F.regexp_extract(
+        key, rf"({_DATA_DIR}/[^/=]+)/(?:[^/]+=[^/]*/)*[^/]+$", 1
     )
 
-    root_norm = _root_norm(label_root)
 
-    def _row(p, fsize, fh):
-        t = read_orc_tail(fh, fsize)
-        return {
-            "partition": _rel_label(p, root_norm),
-            "bytes": fsize,
-            "n_rows": t["num_rows"],
-        }
-
-    per_file = _footer_frame(
-        _orc_listing(spark, paths),
-        _row,
-        "partition string, bytes long, n_rows long",
-    )
-    return (
-        per_file.groupBy("partition")
-        .agg(
-            F.count("*").alias("n_files"),
-            F.sum("bytes").alias("total_bytes"),
-            F.sum("n_rows").alias("total_rows"),
-            F.sum(
-                (F.col("bytes") < small_file_bytes).cast("long")
-            ).alias("n_small_files"),
-        )
-        .withColumn(
-            "small_file_flag",
-            F.col("n_small_files") * 2 > F.col("n_files"),
-        )
-    )
+class _Superseded(Exception):
+    """A flagged dir left the head before the compaction committed."""
 
 
 def compact_small_dirs(
@@ -1469,252 +1443,203 @@ def compact_small_dirs(
     small_file_bytes: int = 32 << 20,
     target_mb: int = 128,
 ) -> "DataFrame":
-    """Object-store-safe audit→compaction for snapshot tables (VERDICT
-    r8 #4): footers-only audit of the LATEST version's data
-    directories, rewrite of the small-file-flagged ones into fresh
-    UNREFERENCED directories, then one single-pointer manifest commit
-    whose directory list carries every unflagged dir by reference and
-    swaps flagged → compacted. No renames, no in-place mutation —
-    the commit discipline that works where ``os.rename`` doesn't:
+    """Small-file compaction for snapshot tables (VERDICT r8 #4), safe
+    on object stores: every small-file-flagged data dir of the LATEST
+    version is rewritten in ONE read into ONE fresh unreferenced dir,
+    and one manifest commit swaps the whole flagged set for it
+    (many-to-one); unflagged dirs ride along by reference. No renames,
+    no in-place mutation:
 
     - a crash before the commit leaves readers on the old version and
-      the new dirs as invisible orphans (``vacuum``'s grace period
-      reclaims them);
+      the new dir as an invisible orphan (``vacuum``'s grace period
+      reclaims it);
     - a reader racing the commit sees either version whole, never a
       mix and never double-counted rows;
-    - a concurrent append between audit and commit is preserved — the
-      directory substitution is re-derived against the current head
-      inside the optimistic-retry loop (``_commit_manifest``).
+    - a concurrent append between plan and commit is preserved — the
+      substitution is re-derived against the current head inside the
+      optimistic-retry loop (``_commit_manifest``); a concurrent
+      rewrite that retired ANY flagged dir cancels the commit (a
+      many-to-one swap over it would bring back rows the rewrite
+      removed), as does a failed row guard: nothing commits, every
+      row reports ``swapped=False``, the new dir is an orphan.
 
-    A flagged dir is only swapped after its rewrite's row count is
-    verified EQUAL (rewrites must never lose rows); on drift the new
-    dir is left unreferenced for vacuum and the old dir stays. Dirs
-    containing hive-partitioned layouts (``partition_by`` snapshots)
-    are left untouched — those version by full rewrite already
-    (``compact_snapshot`` / overwrite semantics).
+    Planning is a driver listing of the head's data dirs (file count
+    and bytes): a dir is flagged when most of its files are under
+    ``small_file_bytes``. Dirs holding hive-partitioned layouts
+    (``partition_by`` snapshots) are left untouched — those version by
+    full rewrite already. One flagged one-file dir on a table without
+    vectors has nothing to gain and is not rewritten.
+
+    The rewrite reads the flagged dirs with the head's vectors applied
+    (dead rows stay dead) and writes ``ceil(bytes / target_mb)`` files.
+    The guard that it lost no rows is counted independently: rows
+    written (an ``Observation`` on the write) must equal the flagged
+    dirs' stored rows minus their live vector rows, both counted in one
+    aggregation over the files and the vectors. Vector rows count as
+    stored, so a legacy table whose vectors repeat a pair fails the
+    guard until ``materialize_deletes`` (which dedups) has run. When no
+    vector row names a dir the commit keeps, the commit clears the
+    vectors too. Unflagged dirs' vectors otherwise carry forward; the
+    entries naming retired dirs simply stop matching anything.
 
     Returns one row per flagged dir: ``(partition, files_before,
-    files_after, rows_before, rows_after, swapped)`` — the same shape
-    as ``operators/layout.py compact_flagged``. Scale: the audit reads
-    footer bytes only; the flagged list is one bounded collect (a row
-    per DATA DIRECTORY, O(appends) by the manifest design); each
-    rewrite shuffles only that directory's rows, and the rewrites
-    submit CONCURRENTLY (bounded thread pool, round 10 — they write
-    disjoint unreferenced uuid dirs with no renames, so the only
-    serialization point is the single manifest commit)."""
+    files_after, rows_before, rows_after, swapped)`` — the shape of
+    ``operators/layout.py compact_flagged``; ``rows_after`` is the
+    dir's live rows (what it contributes to the new dir) and
+    ``swapped`` is read from the manifest that committed. Scale: the
+    listing is O(files of the head), the counting and the rewrite are
+    one Spark aggregation and one write."""
     import math
 
-    from ..operators.parquet_meta import lake_audit_report
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
     versions = snapshot_versions(base_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {base_dir}")
     head = _read_manifest(base_dir, versions[-1])
     fmt = _table_format(head)
-    head_set = set(head["data_dirs"])
+    head_dels = head.get("delete_dirs") or []
     schema_row = (
         "partition string, files_before long, files_after long, "
         "rows_before long, rows_after long, swapped boolean"
     )
-    # audit ONLY the head version's data dirs — listing all of data/
-    # would footer-read every retained version and every orphan, so
-    # maintenance I/O would scale with history instead of head size
-    # (review r9); labels stay relative to data/ so the first path
-    # segment is the uuid dir name. The audit dispatches on the
-    # manifest's data format (round 10): both lanes are metadata-bytes
-    # only.
-    if fmt == "orc":
-        audit = _orc_leaf_audit(
-            spark,
-            [os.path.join(base_dir, d) for d in head["data_dirs"]],
-            label_root=os.path.join(base_dir, _DATA_DIR),
-            small_file_bytes=small_file_bytes,
-        ).collect()
-    else:
-        audit = lake_audit_report(
-            spark,
-            [os.path.join(base_dir, d) for d in head["data_dirs"]],
-            small_file_bytes=small_file_bytes,
-            label_root=os.path.join(base_dir, _DATA_DIR),
-        ).collect()
-    # roll the per-leaf-dir audit rows up to data-dir granularity (the
-    # first path segment under data/); hive-partitioned dirs show up as
-    # 'uuid/key=...' labels and are excluded below
-    per_dir: dict[str, dict] = {}
-    partitioned: set[str] = set()
-    for r in audit:
-        label = r["partition"]
-        top = label.split("/", 1)[0]
-        if label != top:
-            partitioned.add(top)
-            continue
-        per_dir[top] = {
-            "n_files": int(r["n_files"]),
-            "total_rows": int(r["total_rows"]),
-            "total_bytes": int(r["total_bytes"]),
-            "small": bool(r["small_file_flag"]),
-        }
-    flagged = [
-        (os.path.join(_DATA_DIR, d), a)
-        for d, a in sorted(per_dir.items())
-        if a["small"]
-        and d not in partitioned
-        and os.path.join(_DATA_DIR, d) in head_set
-    ]
-    # position deletes on the head (round 9): a flagged dir rewrites
-    # WITH its vectors applied (else the rewrite would resurrect dead
-    # rows); vectors for UNflagged dirs carry forward in the commit,
-    # while entries naming the retired dirs simply stop matching
-    # anything. The apply uses the FULL vector set through the same
-    # key derivation as every reader (never a dir-prefix filter on the
-    # stored keys — those stay absolute when neither root-strip fires,
-    # and a prefix mismatch would silently resurrect rows; review r9),
-    # and the expected row count is taken from the vector-applied
-    # source itself, so the swap guard stays "the write lost nothing".
-    head_dels = head.get("delete_dirs", [])
-    dels_df = (
-        spark.read.parquet(
-            *[os.path.join(base_dir, d) for d in head_dels]
-        ).select("file", "pos")
-        if head_dels
-        else None
+    # plan from a listing of the HEAD's dirs only — listing all of
+    # data/ would plan every retained version and every orphan
+    sizes: dict[str, list[int]] = {}
+    for rel in head["data_dirs"]:
+        if _dirs_look_partitioned(base_dir, [rel]):
+            continue  # hive-partitioned: versions by full rewrite
+        with os.scandir(os.path.join(base_dir, rel)) as it:
+            files = [
+                e.stat().st_size
+                for e in it
+                if e.is_file() and e.name.endswith("." + fmt)
+            ]
+        if sum(b < small_file_bytes for b in files) * 2 > len(files):
+            sizes[rel] = files
+    flagged = list(sizes)
+    if not flagged or (
+        len(flagged) == 1 and len(sizes[flagged[0]]) == 1 and not head_dels
+    ):
+        return spark.createDataFrame([], schema_row)
+
+    # the guard's counts, independent of the rewrite: stored rows per
+    # flagged dir (the scan reads no column) and vector rows per dir
+    rs = _manifest_read_schema(head)
+    reader = (
+        spark.read.schema(rs)
+        if rs is not None
+        else spark.read.option("mergeSchema", "true")
     )
-    from pyspark.sql import functions as F
-
-    def _rewrite_one(item):
-        # one flagged dir → one fresh UNREFERENCED dir: read (vectors
-        # applied), repartition, write, read-back count. Independent
-        # Spark jobs over disjoint uuid dirs with no renames anywhere,
-        # so they submit CONCURRENTLY below (round 10 — the same
-        # executor-parallel posture as the rename-loop compactors);
-        # the single manifest commit afterwards is what publishes.
-        rel, a = item
-        src = os.path.join(base_dir, rel)
-        new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-        dst = os.path.join(base_dir, new_rel)
-        n_files = max(
-            1, math.ceil(a["total_bytes"] / (target_mb << 20))
-        )
-        expected = a["total_rows"]
-        reader = (
-            spark.read.orc([src])
-            if fmt == "orc"
-            else spark.read.parquet(src)
-        )
-        if dels_df is not None:
-            side = dels_df
-            if head.get("delete_rows", 0) <= _BROADCAST_DELETE_ROWS:
-                side = F.broadcast(side)  # same cap as _lineage_read
-            lineage = reader.withColumn(
-                _DV_FILE, _rel_file_col(base_dir)
-            ).withColumn(_DV_POS, F.col("_metadata.row_index"))
-            reader = lineage.join(
-                side,
-                (lineage[_DV_FILE] == side["file"])
-                & (lineage[_DV_POS] == side["pos"]),
-                "left_anti",
-            ).drop(_DV_FILE, _DV_POS)
-            expected = reader.count()
-        getattr(
-            reader.repartition(n_files).write.mode("error"), fmt
-        )(dst)
-        rows_after = (
-            spark.read.orc([dst])
-            if fmt == "orc"
-            else spark.read.parquet(dst)
-        ).count()
-        if rows_after == expected:
-            return (rel, new_rel, a, n_files, rows_after)
-        # drift: the new dir stays unreferenced — vacuum reclaims it
-        return (rel, None, a, a["n_files"], rows_after)
-
-    pending = []  # (rel, new_rel|None, audit, n_files_after, rows_after)
-    swap: dict[str, str] = {}
-    if flagged:
-        import concurrent.futures as _cf
-
-        def _rewrite_safe(item):
-            # one bad dir must not abandon the siblings' rewrites
-            # (ADVICE r10): its row reports swapped=False/-1 rows and
-            # the staged dir (if any) is an orphan for vacuum
-            try:
-                return _rewrite_one(item)
-            except Exception:  # noqa: BLE001 - reported per row
-                rel, a = item
-                return (rel, None, a, a["n_files"], -1)
-
-        workers = min(
-            len(flagged),
-            max(4, spark.sparkContext.defaultParallelism // 2),
-            32,
-        )
-        with _cf.ThreadPoolExecutor(max_workers=workers) as pool:
-            pending = list(pool.map(_rewrite_safe, flagged))
-    for rel, new_rel, _a, _nf, _ra in pending:
-        if new_rel is not None:
-            swap[rel] = new_rel
-    committed: set[str] = set()
-    if swap:
-
-        def _meta():
-            # re-read per commit attempt: a streaming commit that wins
-            # the race mid-compaction carries a NEWER batch_id, and the
-            # retry must republish that one, not the pre-audit value
-            # (review r9 — the replay guard depends on it)
-            last = last_committed_batch(base_dir)
-            return {"batch_id": last} if last is not None else None
-
-        def _schema():
-            versions = snapshot_versions(base_dir)
-            return (
-                _read_manifest(base_dir, versions[-1]).get("schema")
-                if versions
-                else None
+    counted = reader.format(fmt).load(
+        [os.path.join(base_dir, d) for d in flagged]
+    ).select(
+        _data_dir_of(_rel_file_col(base_dir)).alias("d"),
+        F.lit(1).alias("rows"),
+        F.lit(0).alias("dead"),
+    )
+    if head_dels:
+        counted = counted.unionByName(
+            _read_vectors(spark, base_dir, head_dels).select(
+                _data_dir_of(F.col("file")).alias("d"),
+                F.lit(0).alias("rows"),
+                F.lit(1).alias("dead"),
             )
+        )
+    per_dir = {
+        r["d"]: (r["rows"], r["dead"])
+        for r in counted.groupBy("d")
+        .agg(F.sum("rows").alias("rows"), F.sum("dead").alias("dead"))
+        .collect()
+    }
+    rows_before = {d: per_dir.get(d, (0, 0))[0] for d in flagged}
+    live = {d: rows_before[d] - per_dir.get(d, (0, 0))[1] for d in flagged}
+    # vectors may go only if none of their rows names a kept head dir
+    # (or a key whose dir is unreadable)
+    kept = (set(head["data_dirs"]) - set(flagged)) | {""}
+    clear_vectors = not any(per_dir.get(d, (0, 0))[1] for d in kept)
 
-        planned_dels = list(head_dels)
+    new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+    dst = os.path.join(base_dir, new_rel)
+    n_files = max(
+        1,
+        math.ceil(sum(map(sum, sizes.values())) / (target_mb << 20)),
+    )
+    obs = Observation()
+    getattr(
+        _read_manifest_data(spark, base_dir, dict(head, data_dirs=flagged))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .coalesce(n_files)
+        .write.mode("error"),
+        fmt,
+    )(dst)
+    written = int(obs.get["n"])
+    files_after = len(
+        [n for n in os.listdir(dst) if n.endswith("." + fmt)]
+    )
+
+    version = None
+    if written == sum(live.values()):
+        fset = set(flagged)
+
+        def _dirs(head_dirs):
+            if not fset <= set(head_dirs):
+                raise _Superseded()
+            out = [d for d in head_dirs if d not in fset or d == flagged[0]]
+            if written or len(out) == 1:
+                return [new_rel if d == flagged[0] else d for d in out]
+            return [d for d in out if d != flagged[0]]  # no 0-row dir
 
         def _dels(dels, rows):
             # a delete_where that commits MID-compaction may target a
             # flagged dir the rewrite didn't apply it to — carrying it
-            # against the swapped dir would silently resurrect those
-            # rows (review r9); fail loudly, the whole maintenance
-            # pass is the correct retry unit
-            if dels != planned_dels:
+            # against the new dir would silently resurrect those rows
+            # (review r9); fail loudly, the whole maintenance pass is
+            # the correct retry unit
+            if dels != head_dels:
                 raise RuntimeError(
                     "compact_small_dirs raced a delete_where commit; "
                     "re-run the compaction"
                 )
-            return dels, rows
+            return ([], 0) if clear_vectors else (dels, rows)
 
-        version = _commit_manifest(
-            base_dir,
-            lambda head_dirs: [swap.get(d, d) for d in head_dirs],
-            "compact",
-            _schema,
-            _meta,
-            deletes_of_head=_dels,
-        )
-        # `swapped` is reported from the manifest that actually
-        # COMMITTED, not from intent: a concurrent overwrite can race
-        # the old dir out of the head, making the substitution a no-op
-        # for that dir — its rewrite is then just an orphan and must
-        # not be reported as landed work (review r9)
-        committed = set(
-            _read_manifest(base_dir, version)["data_dirs"]
-        )
-    rows = [
-        (
-            rel,
-            a["n_files"],
-            n_after if new_rel in committed else a["n_files"],
-            a["total_rows"],
-            rows_after,
-            new_rel is not None and new_rel in committed,
-        )
-        for rel, new_rel, a, n_after, rows_after in pending
-    ]
-    return spark.createDataFrame(rows, schema_row)
+        def _schema():
+            return _read_manifest(
+                base_dir, snapshot_versions(base_dir)[-1]
+            ).get("schema")
+
+        try:
+            version = _commit_manifest(
+                base_dir,
+                _dirs,
+                "compact",
+                _schema,
+                # re-read per attempt: a streaming commit that wins the
+                # race carries NEWER progress, and the retry must
+                # republish that (review r9 — the replay guard)
+                lambda: _progress(base_dir),
+                deletes_of_head=_dels,
+            )
+        except _Superseded:
+            pass
+    swapped = version is not None and not (
+        set(flagged) & set(_read_manifest(base_dir, version)["data_dirs"])
+    )
+    return spark.createDataFrame(
+        [
+            (
+                d,
+                len(sizes[d]),
+                files_after if swapped else len(sizes[d]),
+                rows_before[d],
+                live[d],
+                swapped,
+            )
+            for d in flagged
+        ],
+        schema_row,
+    )
 
 
 def snapshot_stats(base_dir: str) -> list[dict]:

@@ -493,6 +493,78 @@ def test_replica_still_converges_through_all_change_kinds(spark, tmp_path):
     assert _rows(spark, dst) == _rows(spark, src)
 
 
+def test_replica_position_survives_replica_maintenance(spark, tmp_path):
+    """The feed position rides the replica's manifests: replica
+    maintenance and vacuum(keep_last=1) carry it, so the next drain
+    after an upstream change is a delta merge, not a re-sync."""
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        compact_small_dirs,
+        materialize_deletes,
+        vacuum,
+    )
+
+    src = str(tmp_path / "src")
+    write_snapshot(_df(spark, 0, 200).repartition(4), src, mode="overwrite")
+    dst, ck = str(tmp_path / "replica"), str(tmp_path / "ck")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    delete_where(spark, src, "id < 20")
+    write_snapshot(_df(spark, 300, 310), src, mode="append")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    assert _read_manifest(dst, snapshot_versions(dst)[-1])["mode"] == "merge"
+    materialize_deletes(spark, dst, min_deleted_fraction=0.0)
+    compact_snapshot(spark, dst)
+    compact_small_dirs(spark, dst, small_file_bytes=1 << 20).collect()
+    vacuum(dst, keep_last=1)
+    assert len(snapshot_versions(dst)) == 1
+    assert not os.path.exists(ck)  # the consumer id names no directory
+    write_snapshot(_df(spark, 400, 405), src, mode="append")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    m = _read_manifest(dst, snapshot_versions(dst)[-1])
+    assert m["mode"] == "merge" and m["n_inserted"] == 5
+    assert m["feed_position"] == {
+        "consumer": ck,
+        "version": snapshot_versions(src)[-1],
+    }
+    assert _rows(spark, dst) == _rows(spark, src)
+
+
+def test_replica_drain_crashing_before_its_manifest_converges(
+    spark, tmp_path, monkeypatch
+):
+    """Data and feed position commit in one manifest: a drain killed
+    after its data write but before the commit leaves the replica head
+    unchanged and its staged dir an orphan, and the next drain applies
+    the same range exactly once."""
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    src = str(tmp_path / "src")
+    write_snapshot(_df(spark, 0, 100), src, mode="overwrite")
+    dst, ck = str(tmp_path / "replica"), str(tmp_path / "ck")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    delete_where(spark, src, "id < 10")
+    write_snapshot(_df(spark, 200, 220), src, mode="append")
+    head = snapshot_versions(dst)[-1]
+    m_before = _read_manifest(dst, head)
+    dirs_before = set(os.listdir(os.path.join(dst, "data")))
+
+    def killed(*a, **k):
+        raise OSError("drain killed before its manifest")
+
+    monkeypatch.setattr(snapshots, "_commit_manifest", killed)
+    with pytest.raises(OSError, match="killed before its manifest"):
+        C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    monkeypatch.undo()
+    assert snapshot_versions(dst)[-1] == head
+    assert _read_manifest(dst, head) == m_before
+    staged = set(os.listdir(os.path.join(dst, "data"))) - dirs_before
+    assert len(staged) == 1  # the merge's insert dir, referenced nowhere
+    assert os.path.join("data", staged.pop()) not in m_before["data_dirs"]
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    assert _rows(spark, dst) == _rows(spark, src)
+    ids = [r["id"] for r in read_snapshot(spark, dst).select("id").collect()]
+    assert len(ids) == len(set(ids)) == 110
+
+
 # ---------------------------------------------------------------------------
 # review-fix pins (r12 adversarial pass)
 # ---------------------------------------------------------------------------

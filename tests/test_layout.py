@@ -229,7 +229,7 @@ def test_compact_small_dirs_single_pointer_commit(spark, tmp_path):
     m = snapshots._read_manifest(base, new_head)
     assert m["mode"] == "compact"
     assert m["batch_id"] == 41  # exactly-once watermark carried
-    assert len(m["data_dirs"]) == 3
+    assert len(m["data_dirs"]) == 2  # many-to-one: flagged dirs → ONE
     # the healthy dir rides along BY REFERENCE (same relpath)
     kept = set(dirs_before) & set(m["data_dirs"])
     assert len(kept) == 1
@@ -400,6 +400,51 @@ def test_compact_small_dirs_raced_overwrite_reports_not_swapped(
         r["id"] for r in snapshots.read_snapshot(spark, base).collect()
     )
     assert got == list(range(900, 910))
+
+
+def test_compact_small_dirs_stays_bounded_over_daily_rounds(
+    spark, tmp_path
+):
+    """Daily publish + retention delete + compaction, the self-service
+    maintenance cycle: the head never holds more than two data dirs or
+    a 0-row dir, compaction never changes the live rows, and a round
+    with nothing to gain commits no compact version."""
+    import os
+
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    base = str(tmp_path / "snap")
+
+    def _ids():
+        return sorted(
+            r["id"] for r in snapshots.read_snapshot(spark, base).collect()
+        )
+
+    for day in range(6):
+        snapshots.write_snapshot(
+            spark.range(day * 100, day * 100 + 100)
+            .select(F.col("id"), F.floor(F.col("id") / 100).alias("day"))
+            .repartition(4),
+            base,
+        )
+        snapshots.delete_where(spark, base, f"day < {day - 1}")
+        live = _ids()
+        snapshots.compact_small_dirs(
+            spark, base, small_file_bytes=1 << 20
+        ).collect()
+        head = snapshots._read_manifest(
+            base, snapshots.snapshot_versions(base)[-1]
+        )
+        assert head["mode"] == "compact"
+        assert len(head["data_dirs"]) <= 2
+        for d in head["data_dirs"]:
+            assert spark.read.parquet(os.path.join(base, d)).count() > 0
+        assert _ids() == live
+        v = snapshots.snapshot_versions(base)[-1]
+        again = snapshots.compact_small_dirs(
+            spark, base, small_file_bytes=1 << 20
+        ).collect()
+        assert again == [] and snapshots.snapshot_versions(base)[-1] == v
 
 
 def test_zorder_layout_improves_measured_skipping(spark, tmp_path):
