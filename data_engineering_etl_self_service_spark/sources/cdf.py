@@ -966,9 +966,16 @@ def replicate_snapshot(
     (re-)sync instead: the replica is overwritten from the feed since
     the upstream's beginning (an initial snapshot when history
     expired), because stale local rows can't be trusted there. A drain
-    with no new upstream versions commits nothing; neither does one
-    whose new versions fold to no row change (its position then stays,
-    and the next drain re-reads those versions).
+    with no new upstream versions commits nothing. One whose new
+    versions fold to no row change (upstream maintenance, a restatement
+    that changed nothing) still commits its position, in a manifest
+    that is silent in the replica's own feed, so an upstream
+    ``vacuum`` of those versions can't strand the replica.
+
+    The position commits compare-and-swap: if another drain under the
+    same consumer committed between this drain's plan and its commit,
+    this one raises and commits nothing (its staged dirs are orphans),
+    instead of applying the same range twice.
 
     ``key_cols`` must uniquely identify upstream rows (replication is
     keyed application; a key-less multiset has no well-defined
@@ -996,18 +1003,33 @@ def replicate_snapshot(
         changes_between(spark, src_dir, pos["version"] if resume else 0, head),
         key_cols,
     )
-    meta = {"feed_position": {"consumer": checkpoint_dir, "version": head}}
-    if resume:
-        merge_into_snapshot_delta(
-            spark, dst_dir, act, key_cols, delete_col=TOMBSTONE_COL, meta=meta
-        )
-    else:
+    new_pos = {"consumer": checkpoint_dir, "version": head}
+    if not resume:
         write_snapshot(
             act.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL),
             dst_dir,
             mode="overwrite",
-            meta=meta,
+            meta={"feed_position": new_pos},
         )
+        return
+
+    def _advance() -> dict:
+        # compare-and-swap, re-checked on every commit attempt: a drain
+        # that overlapped this one under the same consumer and committed
+        # first already applied this range — committing it again would
+        # publish every upserted key twice
+        now = _progress(dst_dir, ("feed_position",)).get("feed_position")
+        if now != pos:
+            raise RuntimeError(
+                f"replica {dst_dir!r}: feed position moved from {pos} to "
+                f"{now} during this drain (a concurrent drain under the "
+                "same consumer); nothing committed — re-run the drain"
+            )
+        return {"feed_position": new_pos}
+
+    merge_into_snapshot_delta(
+        spark, dst_dir, act, key_cols, delete_col=TOMBSTONE_COL, meta=_advance
+    )
 
 
 def register_snapshot_cdf(spark: SparkSession) -> bool:

@@ -999,7 +999,7 @@ def merge_into_snapshot_delta(
     updates: DataFrame,
     key_cols: list[str],
     delete_col: str | None = None,
-    meta: dict | None = None,
+    meta=None,
 ) -> int:
     """Delta-native (merge-on-read) MERGE INTO: ONE commit that appends
     the upsert rows as a fresh data dir and kills replaced/deleted rows
@@ -1029,9 +1029,14 @@ def merge_into_snapshot_delta(
     The commit's mode is ``"merge"``: the change feed
     (``sources/cdf.py``) derives it as the version's new vector rows
     as ``delete`` plus its new dir's rows as ``insert`` — a keyed
-    consumer reconciles same-version pairs into updates. Returns the
-    committed version; a no-op merge (no matches, no inserts) returns
-    the current version unchanged. Race posture mirrors
+    consumer reconciles same-version pairs into updates. ``meta`` (a
+    dict, or a zero-arg callable re-evaluated per commit attempt, which
+    may raise to cancel the commit) is recorded in the manifest.
+    Returns the committed version; a no-op merge (no matches, no
+    inserts) returns the current version unchanged, unless ``meta`` is
+    given: it then commits the head's dirs and vectors unchanged with
+    ``meta`` and ``maintenance: true``, silent in the change feed (a
+    replica's drain records its position that way). Race posture mirrors
     ``delete_where``: concurrent appends/deletes commit normally
     (overlapping delete pairs dedupe at commit time), a concurrent
     data REWRITE invalidates the planned positions and raises."""
@@ -1129,7 +1134,8 @@ def merge_into_snapshot_delta(
     if n_ins == 0:
         shutil.rmtree(os.path.join(base_dir, data_rel), ignore_errors=True)
 
-    if n_vec == 0 and n_ins == 0:
+    noop = n_vec == 0 and n_ins == 0
+    if noop and meta is None:
         return versions[-1]
 
     planned = set(manifest["data_dirs"])
@@ -1137,7 +1143,7 @@ def merge_into_snapshot_delta(
     state = {"rel": vec_rel, "n": n_vec}
 
     def _dirs(head_dirs):
-        if not planned <= set(head_dirs):
+        if not noop and not planned <= set(head_dirs):
             raise RuntimeError(
                 "merge_into_snapshot_delta raced a data rewrite "
                 "(compaction/overwrite); positions are stale — re-run "
@@ -1185,9 +1191,12 @@ def merge_into_snapshot_delta(
         # caller does not set are carried from the head (re-read per
         # retry) so vacuum after a merge can't lose a consumer's
         # place — the merge_into_snapshot rule.
-        out = {**_progress(base_dir), **(meta or {})}
+        caller = meta() if callable(meta) else meta or {}
+        out = {**_progress(base_dir), **caller}
         out["n_deleted"] = state["n"]
         out["n_inserted"] = n_ins
+        if noop:
+            out["maintenance"] = True
         return out
 
     return _commit_manifest(
@@ -1467,8 +1476,9 @@ def compact_small_dirs(
     and bytes): a dir is flagged when most of its files are under
     ``small_file_bytes``. Dirs holding hive-partitioned layouts
     (``partition_by`` snapshots) are left untouched — those version by
-    full rewrite already. One flagged one-file dir on a table without
-    vectors has nothing to gain and is not rewritten.
+    full rewrite already. One flagged one-file dir has nothing to gain,
+    and is not rewritten, when no vector row names it and the table's
+    vectors either are absent or must stay for a kept dir.
 
     The rewrite reads the flagged dirs with the head's vectors applied
     (dead rows stay dead) and writes ``ceil(bytes / target_mb)`` files.
@@ -1526,14 +1536,8 @@ def compact_small_dirs(
 
     # the guard's counts, independent of the rewrite: stored rows per
     # flagged dir (the scan reads no column) and vector rows per dir
-    rs = _manifest_read_schema(head)
-    reader = (
-        spark.read.schema(rs)
-        if rs is not None
-        else spark.read.option("mergeSchema", "true")
-    )
-    counted = reader.format(fmt).load(
-        [os.path.join(base_dir, d) for d in flagged]
+    counted = _read_manifest_data(
+        spark, base_dir, {**head, "data_dirs": flagged, "delete_dirs": []}
     ).select(
         _data_dir_of(_rel_file_col(base_dir)).alias("d"),
         F.lit(1).alias("rows"),
@@ -1559,6 +1563,15 @@ def compact_small_dirs(
     # (or a key whose dir is unreadable)
     kept = (set(head["data_dirs"]) - set(flagged)) | {""}
     clear_vectors = not any(per_dir.get(d, (0, 0))[1] for d in kept)
+    if (
+        len(flagged) == 1
+        and len(sizes[flagged[0]]) == 1
+        and live[flagged[0]] == rows_before[flagged[0]]
+        and not clear_vectors
+    ):
+        # a lone one-file dir no vector names, on a table whose vectors
+        # must stay for a kept dir: the rewrite would change nothing
+        return spark.createDataFrame([], schema_row)
 
     new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
     dst = os.path.join(base_dir, new_rel)

@@ -565,6 +565,78 @@ def test_replica_drain_crashing_before_its_manifest_converges(
     assert len(ids) == len(set(ids)) == 110
 
 
+def test_replica_position_advances_over_silent_upstream_versions(
+    spark, tmp_path
+):
+    """Upstream versions that fold to no row change (a compaction is
+    silent in the feed) still advance the replica's position, so an
+    upstream vacuum of them leaves the next drain a delta merge."""
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        vacuum,
+    )
+
+    src = str(tmp_path / "src")
+    write_snapshot(_df(spark, 0, 50), src, mode="overwrite")
+    write_snapshot(_df(spark, 50, 60), src, mode="append")
+    dst, ck = str(tmp_path / "replica"), str(tmp_path / "ck")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    compact_snapshot(spark, src)
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    m = _read_manifest(dst, snapshot_versions(dst)[-1])
+    assert m["feed_position"]["version"] == snapshot_versions(src)[-1]
+    assert m.get("maintenance") is True  # silent in the replica's feed
+    assert C.changes_between(
+        spark, dst, snapshot_versions(dst)[-2], snapshot_versions(dst)[-1]
+    ).count() == 0
+    vacuum(src, keep_last=1)
+    write_snapshot(_df(spark, 70, 75), src, mode="append")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    m = _read_manifest(dst, snapshot_versions(dst)[-1])
+    assert m["mode"] == "merge" and m["n_inserted"] == 5
+    assert _rows(spark, dst) == _rows(spark, src)
+
+
+def test_overlapping_drains_under_one_consumer_commit_once(
+    spark, tmp_path, monkeypatch
+):
+    """Two drains under one consumer plan the same range; the one that
+    commits second finds the position moved and commits nothing, so
+    no upserted key lands twice."""
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    src = str(tmp_path / "src")
+    write_snapshot(_df(spark, 0, 40), src, mode="overwrite")
+    dst, ck = str(tmp_path / "replica"), str(tmp_path / "ck")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    merge_into_snapshot_delta(
+        spark,
+        src,
+        spark.createDataFrame(
+            [(3, 99, "NEW"), (100, 1, "ADD")], "id long, grp long, name string"
+        ),
+        ["id"],
+    )
+    real = snapshots._commit_manifest
+    calls = []
+
+    def interleaved(*a, **k):
+        calls.append(1)
+        if len(calls) == 1:
+            # drain A has planned; drain B runs whole and commits first
+            C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+        return real(*a, **k)
+
+    monkeypatch.setattr(snapshots, "_commit_manifest", interleaved)
+    head = snapshot_versions(dst)[-1]
+    with pytest.raises(RuntimeError, match="feed position moved"):
+        C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    monkeypatch.undo()
+    assert snapshot_versions(dst)[-1] == head + 1  # B's commit only
+    assert _rows(spark, dst) == _rows(spark, src)
+    ids = [r["id"] for r in read_snapshot(spark, dst).select("id").collect()]
+    assert len(ids) == len(set(ids)) == 41
+
+
 # ---------------------------------------------------------------------------
 # review-fix pins (r12 adversarial pass)
 # ---------------------------------------------------------------------------

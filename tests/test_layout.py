@@ -447,6 +447,26 @@ def test_compact_small_dirs_stays_bounded_over_daily_rounds(
         assert again == [] and snapshots.snapshot_versions(base)[-1] == v
 
 
+def test_compact_small_dirs_skips_a_lone_small_dir_no_vector_names(
+    spark, tmp_path
+):
+    """Vectors that name only a large unflagged dir must stay, so
+    rewriting a lone one-file small dir would gain nothing: no commit."""
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    base = str(tmp_path / "snap")
+    snapshots.write_snapshot(
+        spark.range(0, 50000).coalesce(1), base, mode="overwrite"
+    )
+    snapshots.write_snapshot(spark.range(90000, 90005).coalesce(1), base)
+    snapshots.delete_where(spark, base, "id < 10")
+    v = snapshots.snapshot_versions(base)[-1]
+    out = snapshots.compact_small_dirs(
+        spark, base, small_file_bytes=16 << 10
+    ).collect()
+    assert out == [] and snapshots.snapshot_versions(base)[-1] == v
+
+
 def test_zorder_layout_improves_measured_skipping(spark, tmp_path):
     """Writer↔auditor synergy: zorder_by exists to make min/max
     skipping work in BOTH dimensions, and pruning_report is the tool
