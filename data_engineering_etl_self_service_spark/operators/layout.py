@@ -255,11 +255,9 @@ def compact_flagged(
                 swapped,
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "partition string, files_before long, files_after long, "
-        "rows_before long, rows_after long, swapped boolean",
-    )
+    from ..sources.snapshots import _compaction_report
+
+    return _compaction_report(spark, rows)
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 16) -> F.Column:

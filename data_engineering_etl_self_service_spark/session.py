@@ -5,8 +5,17 @@ the same code is correct and fast on a real multi-executor cluster at 100 TB:
 
 - AQE on (runtime partition coalescing, skew-join splitting, dynamic join
   strategy switch) — at 100 TB the static plan is always wrong somewhere.
-- ``spark.sql.shuffle.partitions`` sized to cores locally; on a cluster this
-  is a starting point that AQE coalesces down / splits up.
+- AQE also sizes cached plans
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``). Spark
+  plans a persisted frame with AQE's final-stage optimizations off unless
+  this is set, so a frame that ends in a shuffle keeps every
+  ``shuffle.partitions`` partition: each write from it runs one task and
+  commits one file per partition. The lake paths that persist a frame and
+  write from it twice (the rows-mode pipeline, the delta merge) rely on it.
+  A user ``repartition(n)`` is never coalesced, so explicit layouts hold.
+- ``spark.sql.shuffle.partitions`` is a fixed 32 by default (override with
+  ``shuffle_partitions`` or ``$SPARK_SHUFFLE_PARTITIONS``); AQE coalesces
+  it down at run time, and on a cluster splits skewed partitions up.
 - UTC session timezone so timestamp semantics match the (UTC-naive) oracle.
 - Arrow enabled for the pandas-UDF slow path.
 
@@ -22,6 +31,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP = "data-engineering-etl-self-service-spark"
+_CACHED_PLAN_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def get_spark(
@@ -47,6 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(_CACHED_PLAN_AQE, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -63,9 +74,11 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable defaults to an externally-provided session.
 
     The driver harness owns its own SparkSession; these are the settings we
-    depend on for oracle comparability (UTC timestamps) and local speed.
-    Only runtime-mutable confs are touched.
+    depend on for oracle comparability (UTC timestamps) and local speed,
+    including AQE-sized cached plans (see the module docstring). Only
+    runtime-mutable confs are touched.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set(_CACHED_PLAN_AQE, "true")
     return spark

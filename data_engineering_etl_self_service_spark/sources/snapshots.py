@@ -726,16 +726,7 @@ def delete_where(
     )
     rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
     out = os.path.join(base_dir, rel)
-    # the matched-row count rides the write job as an observed metric
-    # (opt r13): the old read-back count cost one extra Spark job
-    # (+ schema inference) per delete call
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    matches.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "error"
-    ).parquet(out)
-    n_new = int(obs.get["n"])
+    n_new = _write_counted(matches, out)
     if n_new == 0:
         shutil.rmtree(out, ignore_errors=True)
         return versions[-1]
@@ -756,38 +747,11 @@ def delete_where(
         return head_dirs
 
     def _dels(dels, rows):
-        # WRITE-time dedup (round 11 — VERDICT r10 #1 advisory):
-        # concurrent delete_where calls with overlapping predicates
-        # each scan the same head without the other's vector, so both
-        # match the same (file, pos) pairs. The loser of the commit
-        # race anti-joins its vector against the vectors that appeared
-        # since its scan, re-derived per retry, so the manifest's
-        # delete_rows stat is EXACT and readers' anti-join side never
-        # carries redundant pairs. The superseded vector file becomes
-        # a vacuum-reclaimable orphan.
-        extra = [
-            d for d in dels if d not in planned_dels and d != state["rel"]
-        ]
-        if extra:
-            mine = _read_vectors(spark, base_dir, [state["rel"]])
-            theirs = _read_vectors(spark, base_dir, extra)
-            deduped = mine.join(theirs, ["file", "pos"], "left_anti")
-            new_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-            deduped.write.mode("error").parquet(
-                os.path.join(base_dir, new_rel)
-            )
-            n2 = spark.read.parquet(
-                os.path.join(base_dir, new_rel)
-            ).count()
-            if n2 == 0:
-                # every planned pair was already committed by the
-                # concurrent winner — nothing left to publish
-                shutil.rmtree(
-                    os.path.join(base_dir, new_rel), ignore_errors=True
-                )
-                raise _AlreadyDeleted()
-            state["rel"], state["n"] = new_rel, n2
-            planned_dels.update(extra)  # settled: don't re-dedupe
+        _dedup_new_vectors(spark, base_dir, dels, planned_dels, state)
+        if not state["n"]:
+            # every planned pair was already committed by the
+            # concurrent winner — nothing left to publish
+            raise _AlreadyDeleted()
         return dels + [state["rel"]], rows + state["n"]
 
     try:
@@ -806,6 +770,58 @@ def delete_where(
 class _AlreadyDeleted(Exception):
     """Every pair a delete_where planned was committed concurrently by
     another delete — the commit is a no-op, not an error."""
+
+
+def _write_counted(df: DataFrame, path: str, fmt: str = "parquet") -> int:
+    """Write ``df`` as a new dir at ``path``; return the rows written,
+    counted by an ``Observation`` on the write job itself (a read-back
+    count would cost one more job, plus schema inference)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    getattr(
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("error"),
+        fmt,
+    )(path)
+    return int(obs.get["n"])
+
+
+def _dedup_new_vectors(
+    spark: SparkSession,
+    base_dir: str,
+    dels: list,
+    planned_dels: set,
+    state: dict,
+) -> None:
+    """Commit-time vector dedup, run inside a ``deletes_of_head``
+    callback (re-derived per retry). Writers that stage a vector from
+    one head scan (``delete_where``, ``merge_into_snapshot_delta``)
+    race others that matched the same ``(file, pos)`` pairs, because
+    neither scan saw the other's vector. The loser anti-joins its
+    staged vector ``state["rel"]`` against the vectors in ``dels`` that
+    appeared since ``planned_dels``, so the manifest's row stat is
+    exact and readers' anti-join side carries no redundant pair.
+
+    Updates ``state`` (``rel``, ``n``) and ``planned_dels`` in place;
+    ``state`` becomes ``{"rel": None, "n": 0}`` when every pair was
+    already committed. The superseded vector dir is a
+    vacuum-reclaimable orphan."""
+    import shutil
+
+    extra = [d for d in dels if d not in planned_dels and d != state["rel"]]
+    if not extra:
+        return
+    deduped = _read_vectors(spark, base_dir, [state["rel"]]).join(
+        _read_vectors(spark, base_dir, extra), ["file", "pos"], "left_anti"
+    )
+    new_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
+    n = _write_counted(deduped, os.path.join(base_dir, new_rel))
+    if n == 0:
+        shutil.rmtree(os.path.join(base_dir, new_rel), ignore_errors=True)
+        new_rel = None
+    state["rel"], state["n"] = new_rel, n
+    planned_dels.update(extra)  # settled: don't re-dedupe
 
 
 def vacuum(
@@ -1110,26 +1126,14 @@ def merge_into_snapshot_delta(
     matches = lineage.join(touched, key_cols, "left_semi").select(
         F.col(_DV_FILE).alias("file"), F.col(_DV_POS).alias("pos")
     )
-    # row counts ride the write jobs as observed metrics (opt r13):
-    # the old read-back counts cost two extra Spark jobs per merge
-    from pyspark.sql import Observation
-
     vec_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-    vec_obs = Observation()
-    matches.observe(vec_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "error"
-    ).parquet(os.path.join(base_dir, vec_rel))
-    n_vec = int(vec_obs.get["n"])
+    n_vec = _write_counted(matches, os.path.join(base_dir, vec_rel))
     if n_vec == 0:
         shutil.rmtree(os.path.join(base_dir, vec_rel), ignore_errors=True)
 
     inserts = upd.filter(~F.col("__merge_del")).drop("__merge_del")
     data_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-    ins_obs = Observation()
-    inserts.observe(ins_obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "error"
-    ).parquet(os.path.join(base_dir, data_rel))
-    n_ins = int(ins_obs.get["n"])
+    n_ins = _write_counted(inserts, os.path.join(base_dir, data_rel))
     upd.unpersist()  # both consumers (vector + inserts) have run
     if n_ins == 0:
         shutil.rmtree(os.path.join(base_dir, data_rel), ignore_errors=True)
@@ -1152,35 +1156,12 @@ def merge_into_snapshot_delta(
         return head_dirs + [data_rel] if n_ins else head_dirs
 
     def _dels(dels, rows):
-        # commit-time dedup against vectors that appeared since the
-        # scan (a concurrent delete_where matching the same rows) —
-        # the delete_where discipline; unlike there, an emptied vector
-        # is NOT a no-op when inserts remain to publish
+        # unlike delete_where, an emptied vector is NOT a no-op when
+        # inserts remain to publish
+        if state["n"]:
+            _dedup_new_vectors(spark, base_dir, dels, planned_dels, state)
         if not state["n"]:
             return dels, rows
-        extra = [
-            d for d in dels if d not in planned_dels and d != state["rel"]
-        ]
-        if extra:
-            mine = _read_vectors(spark, base_dir, [state["rel"]])
-            theirs = _read_vectors(spark, base_dir, extra)
-            deduped = mine.join(theirs, ["file", "pos"], "left_anti")
-            new_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-            deduped.write.mode("error").parquet(
-                os.path.join(base_dir, new_rel)
-            )
-            n2 = spark.read.parquet(
-                os.path.join(base_dir, new_rel)
-            ).count()
-            if n2 == 0:
-                shutil.rmtree(
-                    os.path.join(base_dir, new_rel), ignore_errors=True
-                )
-                state["rel"], state["n"] = None, 0
-                planned_dels.update(extra)
-                return dels, rows
-            state["rel"], state["n"] = new_rel, n2
-            planned_dels.update(extra)
         return dels + [state["rel"]], rows + state["n"]
 
     def _meta():
@@ -1330,13 +1311,8 @@ def materialize_deletes(
             rewritten = _lineage_read(
                 spark, base_dir, manifest_one
             ).drop(_DV_FILE, _DV_POS)
-            rewritten.write.mode("error").parquet(
-                os.path.join(base_dir, new_rel)
-            )
+            got = _write_counted(rewritten, os.path.join(base_dir, new_rel))
             expected = rows_by_dir[rel] - del_by_dir.get(rel, 0)
-            got = spark.read.parquet(
-                os.path.join(base_dir, new_rel)
-            ).count()
             if got != expected:
                 raise RuntimeError(
                     f"materialize_deletes: rewrite of {rel} kept {got} "
@@ -1352,12 +1328,9 @@ def materialize_deletes(
             covered = covered | dir_of.eqNullSafe(F.lit(rel))
         remaining = dels.filter(~covered)
         new_del_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-        remaining.write.mode("error").parquet(
-            os.path.join(base_dir, new_del_rel)
+        n_remaining = _write_counted(
+            remaining, os.path.join(base_dir, new_del_rel)
         )
-        n_remaining = spark.read.parquet(
-            os.path.join(base_dir, new_del_rel)
-        ).count()
         if n_remaining == 0:
             shutil.rmtree(
                 os.path.join(base_dir, new_del_rel), ignore_errors=True
@@ -1442,6 +1415,34 @@ def _data_dir_of(key):
     )
 
 
+#: one row per flagged compaction unit — the report of both
+#: :func:`compact_small_dirs` and ``operators/layout.py compact_flagged``
+_COMPACTION_REPORT = (
+    ("partition", "string"),
+    ("files_before", "int64"),
+    ("files_after", "int64"),
+    ("rows_before", "int64"),
+    ("rows_after", "int64"),
+    ("swapped", "bool"),
+)
+
+
+def _compaction_report(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """The compaction report frame from ``(partition, files_before,
+    files_after, rows_before, rows_after, swapped)`` tuples. Built from
+    an Arrow table, so it is a local relation: counting or filtering it
+    runs no parallelize job, as a frame built from a list of tuples
+    would."""
+    import pyarrow as pa
+
+    schema = pa.schema(_COMPACTION_REPORT)
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        )
+    )
+
+
 class _Superseded(Exception):
     """A flagged dir left the head before the compaction committed."""
 
@@ -1501,7 +1502,6 @@ def compact_small_dirs(
     one Spark aggregation and one write."""
     import math
 
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     versions = snapshot_versions(base_dir)
@@ -1510,10 +1510,6 @@ def compact_small_dirs(
     head = _read_manifest(base_dir, versions[-1])
     fmt = _table_format(head)
     head_dels = head.get("delete_dirs") or []
-    schema_row = (
-        "partition string, files_before long, files_after long, "
-        "rows_before long, rows_after long, swapped boolean"
-    )
     # plan from a listing of the HEAD's dirs only — listing all of
     # data/ would plan every retained version and every orphan
     sizes: dict[str, list[int]] = {}
@@ -1532,7 +1528,7 @@ def compact_small_dirs(
     if not flagged or (
         len(flagged) == 1 and len(sizes[flagged[0]]) == 1 and not head_dels
     ):
-        return spark.createDataFrame([], schema_row)
+        return _compaction_report(spark, [])
 
     # the guard's counts, independent of the rewrite: stored rows per
     # flagged dir (the scan reads no column) and vector rows per dir
@@ -1571,7 +1567,7 @@ def compact_small_dirs(
     ):
         # a lone one-file dir no vector names, on a table whose vectors
         # must stay for a kept dir: the rewrite would change nothing
-        return spark.createDataFrame([], schema_row)
+        return _compaction_report(spark, [])
 
     new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
     dst = os.path.join(base_dir, new_rel)
@@ -1579,15 +1575,13 @@ def compact_small_dirs(
         1,
         math.ceil(sum(map(sum, sizes.values())) / (target_mb << 20)),
     )
-    obs = Observation()
-    getattr(
-        _read_manifest_data(spark, base_dir, dict(head, data_dirs=flagged))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .coalesce(n_files)
-        .write.mode("error"),
+    written = _write_counted(
+        _read_manifest_data(
+            spark, base_dir, dict(head, data_dirs=flagged)
+        ).coalesce(n_files),
+        dst,
         fmt,
-    )(dst)
-    written = int(obs.get["n"])
+    )
     files_after = len(
         [n for n in os.listdir(dst) if n.endswith("." + fmt)]
     )
@@ -1639,7 +1633,8 @@ def compact_small_dirs(
     swapped = version is not None and not (
         set(flagged) & set(_read_manifest(base_dir, version)["data_dirs"])
     )
-    return spark.createDataFrame(
+    return _compaction_report(
+        spark,
         [
             (
                 d,
@@ -1651,7 +1646,6 @@ def compact_small_dirs(
             )
             for d in flagged
         ],
-        schema_row,
     )
 
 

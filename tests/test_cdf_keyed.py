@@ -637,6 +637,36 @@ def test_overlapping_drains_under_one_consumer_commit_once(
     assert len(ids) == len(set(ids)) == 41
 
 
+def test_resumed_drain_writes_one_file_per_dir(spark, tmp_path):
+    """A resumed drain persists its folded actions and writes the
+    vector and the insert dir from them. AQE sizes that cached plan, so
+    at test scale each new dir holds one file, not one per shuffle
+    partition."""
+    src = str(tmp_path / "src")
+    write_snapshot(_df(spark, 0, 2000), src, mode="overwrite")
+    dst, ck = str(tmp_path / "replica"), str(tmp_path / "ck")
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    delete_where(spark, src, "id % 10 = 0")
+    merge_into_snapshot_delta(
+        spark,
+        src,
+        _df(spark, 1500, 2500).withColumn("name", F.lit("UPSERTED")),
+        ["id"],
+    )
+    C.replicate_snapshot(spark, src, dst, ck, key_cols=["id"])
+    assert _rows(spark, dst) == _rows(spark, src)
+    m = _read_manifest(dst, snapshot_versions(dst)[-1])
+    assert m["mode"] == "merge"
+    assert m["n_inserted"] == 1000 and m["n_deleted"] == 650
+    for rel in (m["data_dirs"][-1], m["delete_dirs"][-1]):
+        files = [
+            f
+            for f in os.listdir(os.path.join(dst, rel))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, rel
+
+
 # ---------------------------------------------------------------------------
 # review-fix pins (r12 adversarial pass)
 # ---------------------------------------------------------------------------

@@ -69,3 +69,42 @@ def test_registry_hygiene():
     for lst in (_FRESH_FIRST, _RECHECK, _ROUND3_NEW, _ROUND4_NEW):
         for n in lst:
             assert n in QUERIES, f"rotation list references unknown query {n}"
+
+
+def test_session_defaults_let_aqe_size_cached_plans(spark, tmp_path):
+    """``ensure_session_defaults`` turns cached-plan sizing on in a
+    session that had it off: a persisted aggregate then writes one file
+    at test scale instead of one per shuffle partition."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_self_service_spark.session import (
+        ensure_session_defaults,
+    )
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+    def files_of_persisted_write(name, mod):
+        df = (
+            spark.range(4000)
+            .groupBy((F.col("id") % mod).alias("k"))
+            .count()
+            .persist()
+        )
+        try:
+            df.write.parquet(str(tmp_path / name))
+        finally:
+            df.unpersist()
+        return [
+            f for f in os.listdir(tmp_path / name) if f.endswith(".parquet")
+        ]
+
+    spark.conf.set(key, "false")
+    try:
+        assert len(files_of_persisted_write("off", 1000)) > 1
+        ensure_session_defaults(spark)
+        assert spark.conf.get(key) == "true"
+        assert len(files_of_persisted_write("on", 1001)) == 1
+    finally:
+        spark.conf.set(key, "true")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import textwrap
 
 from data_engineering_etl_self_service_spark.plans import (
@@ -384,6 +385,112 @@ def test_rows_quality_mode_diverts_only_offenders(spark, tmp_path):
     assert res2.quarantined_rows_path.endswith("__quarantine")
     assert spark.read.parquet(res2.quarantined_rows_path).count() == 2
     assert spark.read.parquet(res2.quarantined_path).count() == 2
+
+
+def _rows_mode_events(spark, path):
+    """500 events of 250 users (so every shuffle partition holds rows),
+    ten of them with a null user for the row gate to divert."""
+    import pyspark.sql.functions as F
+
+    spark.range(500).select(
+        F.when(F.col("id") % 50 == 7, F.lit(None))
+        .otherwise(F.col("id") % 250)
+        .alias("user_id"),
+        F.col("id").alias("event_id"),
+        (F.lit(1_700_000_000) + F.col("id") * 60)
+        .cast("timestamp")
+        .alias("ts"),
+        F.element_at(
+            F.array(F.lit("view"), F.lit("click")), (F.col("id") % 2 + 1).cast("int")
+        ).alias("event_type"),
+    ).write.parquet(path)
+
+
+def _data_files(base, rel):
+    import glob as _glob
+
+    return _glob.glob(os.path.join(base, rel, "*.parquet"))
+
+
+def test_rows_mode_snapshot_publish_writes_one_file_per_dir(spark, tmp_path):
+    """The rows-mode pipeline persists its transformed frame and writes
+    the quarantine and the publish from it. AQE sizes that cached plan,
+    so at test scale each snapshot data dir holds one file, not one per
+    shuffle partition."""
+    from data_engineering_etl_self_service_spark.operators.sessionize import (
+        sessionize,
+    )
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    src = str(tmp_path / "events.parquet")
+    _rows_mode_events(spark, src)
+    out = str(tmp_path / "sessions")
+    spec = spec_from_dict(
+        {
+            "pipeline_info": {"name": "rows_sessions"},
+            "source": {"type": "file", "format": "parquet", "path": src},
+            "data_quality_mode": "rows",
+            "transformations": [
+                {"op": "sessionize", "gap_minutes": 30},
+                {
+                    "op": "aggregate",
+                    "group_by": ["user_id", "session_seq"],
+                    "aggs": {"n_events": "count(*)"},
+                },
+            ],
+            "data_quality_checks": [
+                {"check_type": "non_null", "column": "user_id"},
+                {"check_type": "min_row_count", "threshold": 10},
+            ],
+            "destination": {"type": "snapshot", "path": out},
+        }
+    )
+    res = run_pipeline(spark, spec)
+    assert res.passed and res.published_path == out
+    direct = (
+        sessionize(spark.read.parquet(src))
+        .groupBy("user_id", "session_seq")
+        .count()
+    )
+    assert res.metrics["rows_quarantined"] == direct.filter(
+        "user_id IS NULL"
+    ).count()
+    got = snapshots.read_snapshot(spark, out)
+    assert sorted(
+        tuple(r) for r in got.select("user_id", "session_seq", "n_events").collect()
+    ) == sorted(tuple(r) for r in direct.filter("user_id IS NOT NULL").collect())
+    for base in (out, res.quarantined_rows_path):
+        head = snapshots._read_manifest(base, snapshots.snapshot_versions(base)[-1])
+        for rel in head["data_dirs"]:
+            assert len(_data_files(base, rel)) == 1, (base, rel)
+
+
+def test_rows_mode_explicit_repartition_keeps_its_files(spark, tmp_path):
+    """An explicit YAML ``repartition`` is a layout the user asked for:
+    the cached-plan sizing never coalesces it, so the publish keeps its
+    16 files."""
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    src = str(tmp_path / "events.parquet")
+    _rows_mode_events(spark, src)
+    out = str(tmp_path / "wide")
+    spec = spec_from_dict(
+        {
+            "pipeline_info": {"name": "rows_wide"},
+            "source": {"type": "file", "format": "parquet", "path": src},
+            "data_quality_mode": "rows",
+            "transformations": [{"op": "repartition", "n": 16}],
+            "data_quality_checks": [
+                {"check_type": "non_null", "column": "user_id"},
+            ],
+            "destination": {"type": "snapshot", "path": out},
+        }
+    )
+    res = run_pipeline(spark, spec)
+    assert res.passed and res.metrics["rows_quarantined"] == 10
+    head = snapshots._read_manifest(out, snapshots.snapshot_versions(out)[-1])
+    assert [len(_data_files(out, rel)) for rel in head["data_dirs"]] == [16]
+    assert snapshots.read_snapshot(spark, out).count() == 490
 
 
 def test_unknown_quality_mode_warns_and_defaults(spark):
