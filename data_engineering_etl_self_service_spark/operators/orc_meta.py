@@ -1376,11 +1376,9 @@ def compact_orc_flagged(
             (part, files_before, files_after, rows_before,
              rows_before, ok)
         )
-    return spark.createDataFrame(
-        rows,
-        "partition string, files_before long, files_after long, "
-        "rows_before long, rows_after long, swapped boolean",
-    )
+    from ..sources.snapshots import _compaction_report
+
+    return _compaction_report(spark, rows)
 
 
 def orc_layout_report(spark, path: str, force_generic: bool = False):

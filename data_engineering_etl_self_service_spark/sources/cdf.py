@@ -50,9 +50,11 @@ Change derivation per committed version (manifest modes):
   ``insert`` — both are the commit's own delta; a keyed consumer
   reconciles same-version delete+insert pairs into updates
   (:func:`reconcile_updates`).
-- ``compact`` / ``materialize`` / any commit tagged
-  ``maintenance: true`` (``compact_snapshot``) → NO rows: data-layout
+- ``compact`` (``compact_small_dirs``, ``compact_snapshot``) /
+  ``materialize`` (``materialize_deletes``) → NO rows: data-layout
   maintenance never changes logical content, so the feed is silent.
+  So is any commit tagged ``maintenance: true`` (a replica drain that
+  only records its feed position).
 
 History expiry (``vacuum``) follows the Delta/Iceberg contract: a
 consumer starting BEFORE the earliest retained version gets that
@@ -981,7 +983,10 @@ def replicate_snapshot(
     keyed application; a key-less multiset has no well-defined
     replica). Replica maintenance is the standard set:
     ``materialize_deletes`` folds accumulated vectors,
-    ``compact_snapshot``/``compact_small_dirs`` merge dirs; all are
+    ``compact_snapshot``/``compact_small_dirs`` merge dirs. All three
+    commit through one guarded rewrite that carries the feed position
+    forward (re-read per commit attempt) and raises, committing
+    nothing, when a drain's delta merge lands mid-rewrite; all are
     silent in the replica's own change feed."""
     from pyspark.sql import functions as F
 

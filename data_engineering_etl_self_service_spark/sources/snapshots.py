@@ -40,14 +40,24 @@ Design notes for scale:
   anti-join on (file, pos). Compaction/overwrite MATERIALIZES the
   deletes and clears the vectors; time travel to a pre-delete version
   still sees the rows.
+- **One maintenance rewrite**: ``compact_small_dirs``,
+  ``compact_snapshot`` and ``materialize_deletes`` only PLAN (which
+  dirs, how many files, which commit mode); all three then run
+  ``_rewrite_dirs``, which reads the chosen dirs once with vectors
+  applied, writes ONE new dir, refuses to commit unless rows written
+  equal stored rows minus distinct dead pairs, and swaps the set in
+  one guarded commit: a racing append is kept, a racing delete
+  raises, consumer progress is re-read per attempt.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -177,9 +187,10 @@ def _commit_manifest(
     (delete_dirs, delete_rows)`` controls the position-delete carry
     (round 9), re-derived against the current head per retry like the
     data dirs. Default: ``overwrite`` clears the vectors (the new data
-    IS the post-delete truth — both full-rewrite writers read through
-    :func:`read_snapshot`, which applies them); every other mode
-    carries them by reference. Returns the committed version number."""
+    IS the post-delete truth — :func:`merge_into_snapshot` reads
+    through :func:`read_snapshot`, which applies them); every other
+    mode carries them by reference. Returns the committed version
+    number."""
     os.makedirs(os.path.join(base_dir, _MANIFEST_DIR), exist_ok=True)
     for _ in range(max_retries):
         versions = snapshot_versions(base_dir)
@@ -602,7 +613,7 @@ def _read_manifest_data(
 ) -> DataFrame:
     """The visible rows of ``manifest``'s data dirs, vectors applied:
     :func:`read_snapshot`'s body, also fed a subset of a version's
-    dirs by :func:`compact_small_dirs`."""
+    dirs by the maintenance rewrite (:func:`_rewrite_dirs`)."""
     if manifest.get("delete_dirs"):
         return _lineage_read(spark, base_dir, manifest).drop(
             _DV_FILE, _DV_POS
@@ -1218,189 +1229,6 @@ def _dir_row_counts(
     )
 
 
-def materialize_deletes(
-    spark: SparkSession,
-    base_dir: str,
-    min_deleted_fraction: float = 0.1,
-) -> int:
-    """Targeted delete-vector materialization (the Iceberg
-    ``rewrite_position_deletes``/``rewrite_data_files`` maintenance
-    pair, on the manifest protocol): rewrite ONLY the data dirs whose
-    deleted-row fraction reached ``min_deleted_fraction`` (vectors
-    applied, so the rewrite is the post-delete truth), then shrink the
-    vector set to the entries still covering surviving dirs — a table
-    that accumulated heavy deletes in one region pays one bounded
-    rewrite there, not a full-table compaction, and readers' anti-join
-    side gets smaller instead of growing forever.
-
-    Per-dir accounting is footers-only AND driver-bounded: file row
-    counts come from executor-side footer decode rolled up to one row
-    per data DIR before collection (:func:`_dir_row_counts` — VERDICT
-    r9 #1), deleted counts from the vector files' dir prefixes — the
-    driver holds O(data dirs) rows at any table size. Returns the
-    committed version; a table without vectors (or with nothing over
-    the threshold AND nothing to shrink) returns the current version
-    unchanged. Race posture mirrors ``compact_small_dirs``: the commit
-    re-derives against the current head and fails loudly when a
-    concurrent delete/rewrite invalidates the plan."""
-    from pyspark.sql import functions as F
-
-    versions = snapshot_versions(base_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {base_dir}")
-    head = _read_manifest(base_dir, versions[-1])
-    head_dels = head.get("delete_dirs") or []
-    if not head_dels:
-        return versions[-1]
-    # concurrent delete_where calls with overlapping predicates could
-    # historically land one dead row in TWO vector files (commit-time
-    # dedup closes that at the source since round 11, but tables
-    # written before it may still carry duplicates); the anti-join
-    # doesn't care, but counting duplicates would inflate del_by_dir
-    # and make the rewrite's expected row count mismatch the actual
-    # rewrite, aborting the pass with a spurious RuntimeError (ADVICE
-    # r9). The deduped frame feeds BOTH the per-dir count and the
-    # remaining-vector rewrite below — materialize it ONCE as a
-    # parquet spill under the table's own delete root (VERDICT r10
-    # #2: localCheckpoint blocks live on executors, so an executor
-    # loss mid-maintenance killed the pass on a real cluster; the
-    # spill is the same bounded metadata, crash leftovers are
-    # unreferenced orphans vacuum reclaims, and it is removed below)
-    import shutil
-
-    spill_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-    spill = os.path.join(base_dir, spill_rel)
-    (
-        _read_vectors(spark, base_dir, head_dels)
-        .dropDuplicates(["file", "pos"])
-        .write.mode("error")
-        .parquet(spill)
-    )
-    dels = _read_vectors(spark, base_dir, [spill_rel])
-    try:
-        # dir attribution from the vector key itself, relative or
-        # absolute (_data_dir_of handles both)
-        dir_of = _data_dir_of(F.col("file"))
-        del_by_dir = {
-            r["d"]: r["n"]
-            for r in dels.groupBy(dir_of.alias("d"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-            if r["d"]
-        }
-        rows_by_dir = {
-            r["d"]: r["n"]
-            for r in _dir_row_counts(
-                spark, base_dir, head["data_dirs"]
-            ).collect()
-        }
-        flagged = [
-            d
-            for d in head["data_dirs"]
-            if rows_by_dir.get(d, 0) > 0
-            and del_by_dir.get(d, 0) / rows_by_dir[d]
-            >= min_deleted_fraction
-        ]
-        if not flagged:
-            return versions[-1]
-
-        swap: dict[str, str] = {}
-        for rel in flagged:
-            new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-            manifest_one = dict(head, data_dirs=[rel])
-            rewritten = _lineage_read(
-                spark, base_dir, manifest_one
-            ).drop(_DV_FILE, _DV_POS)
-            got = _write_counted(rewritten, os.path.join(base_dir, new_rel))
-            expected = rows_by_dir[rel] - del_by_dir.get(rel, 0)
-            if got != expected:
-                raise RuntimeError(
-                    f"materialize_deletes: rewrite of {rel} kept {got} "
-                    f"rows, expected {expected} — aborting before "
-                    "commit (the new dir is a vacuum-reclaimable "
-                    "orphan)"
-                )
-            swap[rel] = new_rel
-
-        # vectors still needed: entries NOT covered by a rewritten dir
-        covered = F.lit(False)
-        for rel in flagged:
-            covered = covered | dir_of.eqNullSafe(F.lit(rel))
-        remaining = dels.filter(~covered)
-        new_del_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
-        n_remaining = _write_counted(
-            remaining, os.path.join(base_dir, new_del_rel)
-        )
-        if n_remaining == 0:
-            shutil.rmtree(
-                os.path.join(base_dir, new_del_rel), ignore_errors=True
-            )
-
-        planned_dels = list(head_dels)
-
-        def _dels(cur, rows):
-            if cur != planned_dels:
-                raise RuntimeError(
-                    "materialize_deletes raced a delete_where commit; "
-                    "re-run the maintenance pass"
-                )
-            return (
-                ([new_del_rel], n_remaining) if n_remaining else ([], 0)
-            )
-
-        def _dirs(cur):
-            if not set(swap) <= set(cur):
-                raise RuntimeError(
-                    "materialize_deletes raced a data rewrite; re-run "
-                    "the maintenance pass"
-                )
-            return [swap.get(d, d) for d in cur]
-
-        return _commit_manifest(
-            base_dir,
-            _dirs,
-            "materialize",
-            head.get("schema"),
-            _progress(base_dir),
-            deletes_of_head=_dels,
-        )
-    finally:
-        shutil.rmtree(spill, ignore_errors=True)
-
-
-def compact_snapshot(
-    spark: SparkSession, base_dir: str, target_files: int | None = None
-) -> int:
-    """Rewrite the latest version's (possibly many, append-accumulated)
-    data directories as ONE fresh directory — same rows, new version.
-    The snapshot analog of small-file compaction: appends and streaming
-    micro-batch commits accumulate directories; readers of the new
-    version list one. Pair with :func:`vacuum` to reclaim the old dirs
-    once no retained version references them.
-
-    The new manifest carries forward the table's consumer progress
-    (:func:`_progress`), so the compact→vacuum maintenance pair (the
-    CLI's ``optimize --snapshot``) preserves :func:`last_committed_batch`
-    (the exactly-once replay guard of :func:`snapshot_batch_sink`) and
-    a replica's feed position.
-
-    The commit is tagged ``maintenance: true`` (round 11): it rewrites
-    layout, never logical content, so the change feed
-    (``sources/cdf.py``) stays silent on it instead of restating the
-    whole table as delete+insert like a real overwrite.
-    """
-    df = read_snapshot(spark, base_dir)
-    if target_files is not None:
-        df = df.coalesce(int(target_files))
-    return write_snapshot(
-        df,
-        base_dir,
-        mode="overwrite",
-        meta={"maintenance": True, **_progress(base_dir)},
-        format=_table_format(_head_manifest(base_dir)),
-    )
-
-
 def _data_dir_of(key):
     """The ``data/<uuid>`` dir a data-file key (a vector's ``file``, or
     :func:`_rel_file_col`) names, relative or absolute: the LAST
@@ -1415,8 +1243,9 @@ def _data_dir_of(key):
     )
 
 
-#: one row per flagged compaction unit — the report of both
-#: :func:`compact_small_dirs` and ``operators/layout.py compact_flagged``
+#: one row per flagged compaction unit — the report of
+#: :func:`compact_small_dirs`, ``operators/layout.py compact_flagged``
+#: and ``operators/orc_meta.py compact_orc_flagged``
 _COMPACTION_REPORT = (
     ("partition", "string"),
     ("files_before", "int64"),
@@ -1444,7 +1273,274 @@ def _compaction_report(spark: SparkSession, rows: list[tuple]) -> DataFrame:
 
 
 class _Superseded(Exception):
-    """A flagged dir left the head before the compaction committed."""
+    """A dir a rewrite read left the head before the rewrite committed."""
+
+
+def _file_sizes(base_dir: str, rel: str, fmt: str) -> list[int]:
+    """Byte sizes of the ``fmt`` data files under the data dir ``rel``,
+    hive ``k=v`` subdirectories included (a driver listing)."""
+    return [
+        os.path.getsize(os.path.join(root, n))
+        for root, _, names in os.walk(os.path.join(base_dir, rel))
+        for n in names
+        if n.endswith("." + fmt)
+    ]
+
+
+def _files_for(n_bytes: int, target_mb: int = 128) -> int:
+    """Output files for a rewrite of ``n_bytes``: one per ``target_mb``."""
+    return max(1, math.ceil(n_bytes / (target_mb << 20)))
+
+
+def _count_dirs(
+    spark: SparkSession, base_dir: str, head: dict, dirs: list[str]
+) -> tuple[Counter, Counter]:
+    """``(rows, dead)`` per data dir from ONE aggregation: the stored
+    rows of ``dirs`` (a scan that reads no column) and the DISTINCT
+    ``(file, pos)`` pairs of all of ``head``'s vectors, keyed by the dir
+    each pair names (``''`` for a key naming none). Distinct, so a
+    legacy table whose vectors repeat a pair counts it once. The pairs
+    are counted as a per-dir set: one shuffle, on the dir, like a plain
+    sum (``countDistinct`` plans a second one, and one more job); a
+    dir's reducer holds that dir's dead pairs, memory of the order the
+    broadcast read of the vectors already takes."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    parts = []
+    if dirs:
+        scan = {**head, "data_dirs": dirs, "delete_dirs": []}
+        parts.append(
+            _read_manifest_data(spark, base_dir, scan).select(
+                _data_dir_of(_rel_file_col(base_dir)).alias("d"),
+                F.lit(1).alias("rows"),
+                F.lit(None).cast("struct<file:string,pos:bigint>")
+                .alias("pair"),
+            )
+        )
+    if head.get("delete_dirs"):
+        parts.append(
+            _read_vectors(spark, base_dir, head["delete_dirs"]).select(
+                _data_dir_of(F.col("file")).alias("d"),
+                F.lit(0).alias("rows"),
+                F.struct("file", "pos").alias("pair"),
+            )
+        )
+    rows, dead = Counter(), Counter()
+    for r in (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy("d")
+        .agg(
+            F.sum("rows").alias("rows"),
+            F.size(F.collect_set("pair")).alias("dead"),
+        )
+        .collect()
+    ):
+        rows[r["d"]], dead[r["d"]] = r["rows"], r["dead"]
+    return rows, dead
+
+
+def _rewrite_dirs(
+    spark: SparkSession,
+    base_dir: str,
+    head: dict,
+    dirs: list[str],
+    n_files: int,
+    mode: str,
+    counts: tuple[Counter, Counter],
+) -> tuple[int | None, int]:
+    """The one rewrite behind every snapshot maintenance call: swap
+    ``dirs`` of ``head`` for ONE new dir of at most ``n_files`` files
+    in one ``mode`` commit; the head's other dirs ride along by
+    reference. ``counts`` is ``(rows, dead)`` per dir
+    (:func:`_count_dirs`, or footers), counted apart from the rewrite.
+
+    Nothing commits unless the rows written (read once, vectors
+    applied) equal the stored rows of ``dirs`` minus their dead pairs.
+    Vectors clear when no pair names a kept dir (the head's other dirs,
+    or ``''``); when pairs name both kept and rewritten dirs, the kept
+    dirs' pairs become one new vector dir; otherwise they carry
+    forward. The commit is re-derived per attempt
+    (:func:`_commit_manifest`): a racing append is kept; a dir retired
+    meanwhile cancels it (the swap would bring back rows the retiring
+    rewrite removed); a racing vector commit raises (the rewrite did
+    not apply it, and the whole pass is the retry unit); schema and
+    consumer progress (:func:`_progress`) are re-read, so a retry
+    republishes a newer ``batch_id``. Returns ``(version, files
+    written)``; ``version`` is ``None`` when nothing committed, and
+    the new dirs are then orphans for ``vacuum``."""
+    from pyspark.sql import functions as F
+
+    fmt = _table_format(head)
+    head_dels = head.get("delete_dirs") or []
+    rows, dead = counts
+    new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
+    dst = os.path.join(base_dir, new_rel)
+    written = _write_counted(
+        _read_manifest_data(
+            spark, base_dir, dict(head, data_dirs=dirs)
+        ).coalesce(n_files),
+        dst,
+        fmt,
+    )
+    files = len([n for n in os.listdir(dst) if n.endswith("." + fmt)])
+    if written != sum(rows[d] - dead[d] for d in dirs):
+        return None, files
+
+    kept = (set(head["data_dirs"]) - set(dirs)) | {""}
+    vectors = None  # carry forward
+    if not any(dead[d] for d in kept):
+        vectors = ([], 0)
+    elif any(dead[d] for d in dirs):
+        vec_rel = os.path.join(_DELETE_DIR, uuid.uuid4().hex)
+        n = _write_counted(
+            _read_vectors(spark, base_dir, head_dels)
+            .filter(_data_dir_of(F.col("file")).isin(sorted(kept)))
+            .dropDuplicates(["file", "pos"]),
+            os.path.join(base_dir, vec_rel),
+        )
+        vectors = ([vec_rel], n)
+    fset = set(dirs)
+
+    def _dirs(head_dirs):
+        if not fset <= set(head_dirs):
+            raise _Superseded()
+        out = [d for d in head_dirs if d not in fset or d == dirs[0]]
+        if written or len(out) == 1:
+            return [new_rel if d == dirs[0] else d for d in out]
+        return [d for d in out if d != dirs[0]]  # no 0-row dir
+
+    def _dels(cur, n_rows):
+        if cur != head_dels:
+            raise RuntimeError(
+                f"snapshot maintenance ({mode}) raced a delete_where "
+                "commit; re-run the maintenance pass"
+            )
+        return vectors or (cur, n_rows)
+
+    try:
+        version = _commit_manifest(
+            base_dir,
+            _dirs,
+            mode,
+            lambda: _read_manifest(
+                base_dir, snapshot_versions(base_dir)[-1]
+            ).get("schema"),
+            lambda: _progress(base_dir),
+            deletes_of_head=_dels,
+        )
+    except _Superseded:
+        version = None
+    return version, files
+
+
+def _committed(version: int | None, name: str) -> int:
+    """``version``, or a loud failure when nothing committed."""
+    if version is None:
+        raise RuntimeError(
+            f"{name} committed nothing: a concurrent rewrite retired a "
+            "dir it read, or its rewrite missed the row guard; re-run "
+            "the maintenance pass"
+        )
+    return version
+
+
+def materialize_deletes(
+    spark: SparkSession,
+    base_dir: str,
+    min_deleted_fraction: float = 0.1,
+) -> int:
+    """Targeted delete-vector materialization (the Iceberg
+    ``rewrite_position_deletes``/``rewrite_data_files`` maintenance
+    pair, on the manifest protocol): rewrite ONLY the data dirs whose
+    deleted-row fraction reached ``min_deleted_fraction`` — a table
+    that accumulated heavy deletes in one region pays one bounded
+    rewrite there, and readers' anti-join side shrinks.
+
+    Planning is driver-bounded: stored rows per dir from footers
+    (:func:`_dir_row_counts`), dead rows per dir from the DISTINCT
+    vector pairs (:func:`_count_dirs`), so repeated pairs on a legacy
+    table count once. The flagged dirs then go through the maintenance
+    rewrite (:func:`_rewrite_dirs`) as one ``materialize`` commit: ONE
+    new dir of ``ceil(bytes / 128 MB)`` files, vectors cleared or
+    shrunk to the pairs naming kept dirs. Returns the committed
+    version, or the current one when the table has no vectors or no
+    dir over the threshold. A concurrent delete or rewrite raises
+    ``RuntimeError`` with nothing committed: re-run it."""
+    versions = snapshot_versions(base_dir)
+    if not versions:
+        raise FileNotFoundError(f"no snapshots at {base_dir}")
+    head = _read_manifest(base_dir, versions[-1])
+    if not head.get("delete_dirs"):
+        return versions[-1]
+    _, dead = _count_dirs(spark, base_dir, head, [])
+    rows = Counter(
+        {
+            r["d"]: r["n"]
+            for r in _dir_row_counts(
+                spark, base_dir, head["data_dirs"]
+            ).collect()
+        }
+    )
+    flagged = [
+        d
+        for d in head["data_dirs"]
+        if rows[d] and dead[d] / rows[d] >= min_deleted_fraction
+    ]
+    if not flagged:
+        return versions[-1]
+    fmt = _table_format(head)
+    n_bytes = sum(sum(_file_sizes(base_dir, d, fmt)) for d in flagged)
+    version, _ = _rewrite_dirs(
+        spark,
+        base_dir,
+        head,
+        flagged,
+        _files_for(n_bytes),
+        "materialize",
+        (rows, dead),
+    )
+    return _committed(version, "materialize_deletes")
+
+
+def compact_snapshot(
+    spark: SparkSession, base_dir: str, target_files: int | None = None
+) -> int:
+    """Rewrite ALL of the latest version's data directories as ONE
+    fresh directory — same rows, new version — of ``target_files``
+    files, or one per 128 MB when ``None``; the delete vectors are
+    materialized and cleared. Pair with :func:`vacuum` to reclaim the
+    old dirs once no retained version references them.
+
+    A planner over the maintenance rewrite (:func:`_rewrite_dirs`),
+    committed with mode ``compact``: silent in the change feed
+    (``sources/cdf.py``), consumer progress (:func:`_progress`) carried,
+    so the compact→vacuum pair (the CLI's ``optimize --snapshot``)
+    keeps :func:`last_committed_batch` (the replay guard of
+    :func:`snapshot_batch_sink`) and a replica's feed position. An
+    append committed during the rewrite is kept; a concurrent delete
+    or rewrite raises ``RuntimeError`` with nothing committed: re-run
+    it."""
+    head = _head_manifest(base_dir)
+    dirs = head["data_dirs"]
+    if target_files is None:
+        fmt = _table_format(head)
+        n_files = _files_for(
+            sum(sum(_file_sizes(base_dir, d, fmt)) for d in dirs)
+        )
+    else:
+        n_files = int(target_files)
+    version, _ = _rewrite_dirs(
+        spark,
+        base_dir,
+        head,
+        dirs,
+        n_files,
+        "compact",
+        _count_dirs(spark, base_dir, head, dirs),
+    )
+    return _committed(version, "compact_snapshot")
 
 
 def compact_small_dirs(
@@ -1458,20 +1554,13 @@ def compact_small_dirs(
     version is rewritten in ONE read into ONE fresh unreferenced dir,
     and one manifest commit swaps the whole flagged set for it
     (many-to-one); unflagged dirs ride along by reference. No renames,
-    no in-place mutation:
-
-    - a crash before the commit leaves readers on the old version and
-      the new dir as an invisible orphan (``vacuum``'s grace period
-      reclaims it);
-    - a reader racing the commit sees either version whole, never a
-      mix and never double-counted rows;
-    - a concurrent append between plan and commit is preserved — the
-      substitution is re-derived against the current head inside the
-      optimistic-retry loop (``_commit_manifest``); a concurrent
-      rewrite that retired ANY flagged dir cancels the commit (a
-      many-to-one swap over it would bring back rows the rewrite
-      removed), as does a failed row guard: nothing commits, every
-      row reports ``swapped=False``, the new dir is an orphan.
+    no in-place mutation. The rewrite, its row guard, the vector carry
+    and the race posture are the maintenance rewrite's
+    (:func:`_rewrite_dirs`, mode ``compact``): a concurrent append is
+    kept, a concurrent rewrite that retired ANY flagged dir or a failed
+    row guard leaves nothing committed (every row reports
+    ``swapped=False``, the new dir is an orphan), a concurrent
+    ``delete_where`` raises.
 
     Planning is a driver listing of the head's data dirs (file count
     and bytes): a dir is flagged when most of its files are under
@@ -1479,160 +1568,52 @@ def compact_small_dirs(
     (``partition_by`` snapshots) are left untouched — those version by
     full rewrite already. One flagged one-file dir has nothing to gain,
     and is not rewritten, when no vector row names it and the table's
-    vectors either are absent or must stay for a kept dir.
-
-    The rewrite reads the flagged dirs with the head's vectors applied
-    (dead rows stay dead) and writes ``ceil(bytes / target_mb)`` files.
-    The guard that it lost no rows is counted independently: rows
-    written (an ``Observation`` on the write) must equal the flagged
-    dirs' stored rows minus their live vector rows, both counted in one
-    aggregation over the files and the vectors. Vector rows count as
-    stored, so a legacy table whose vectors repeat a pair fails the
-    guard until ``materialize_deletes`` (which dedups) has run. When no
-    vector row names a dir the commit keeps, the commit clears the
-    vectors too. Unflagged dirs' vectors otherwise carry forward; the
-    entries naming retired dirs simply stop matching anything.
+    vectors either are absent or must stay for a kept dir. The rewrite
+    writes ``ceil(bytes / target_mb)`` files; its guard counts stored
+    rows and DISTINCT dead pairs in one aggregation
+    (:func:`_count_dirs`), so tables whose vectors repeat a pair
+    compact too.
 
     Returns one row per flagged dir: ``(partition, files_before,
     files_after, rows_before, rows_after, swapped)`` — the shape of
     ``operators/layout.py compact_flagged``; ``rows_after`` is the
-    dir's live rows (what it contributes to the new dir) and
-    ``swapped`` is read from the manifest that committed. Scale: the
+    dir's live rows (what it contributes to the new dir). Scale: the
     listing is O(files of the head), the counting and the rewrite are
     one Spark aggregation and one write."""
-    import math
-
-    from pyspark.sql import functions as F
-
     versions = snapshot_versions(base_dir)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {base_dir}")
     head = _read_manifest(base_dir, versions[-1])
     fmt = _table_format(head)
-    head_dels = head.get("delete_dirs") or []
     # plan from a listing of the HEAD's dirs only — listing all of
     # data/ would plan every retained version and every orphan
     sizes: dict[str, list[int]] = {}
     for rel in head["data_dirs"]:
         if _dirs_look_partitioned(base_dir, [rel]):
             continue  # hive-partitioned: versions by full rewrite
-        with os.scandir(os.path.join(base_dir, rel)) as it:
-            files = [
-                e.stat().st_size
-                for e in it
-                if e.is_file() and e.name.endswith("." + fmt)
-            ]
+        files = _file_sizes(base_dir, rel, fmt)
         if sum(b < small_file_bytes for b in files) * 2 > len(files):
             sizes[rel] = files
     flagged = list(sizes)
-    if not flagged or (
-        len(flagged) == 1 and len(sizes[flagged[0]]) == 1 and not head_dels
-    ):
+    lone = len(flagged) == 1 and len(sizes[flagged[0]]) == 1
+    if not flagged or (lone and not head.get("delete_dirs")):
         return _compaction_report(spark, [])
-
-    # the guard's counts, independent of the rewrite: stored rows per
-    # flagged dir (the scan reads no column) and vector rows per dir
-    counted = _read_manifest_data(
-        spark, base_dir, {**head, "data_dirs": flagged, "delete_dirs": []}
-    ).select(
-        _data_dir_of(_rel_file_col(base_dir)).alias("d"),
-        F.lit(1).alias("rows"),
-        F.lit(0).alias("dead"),
-    )
-    if head_dels:
-        counted = counted.unionByName(
-            _read_vectors(spark, base_dir, head_dels).select(
-                _data_dir_of(F.col("file")).alias("d"),
-                F.lit(0).alias("rows"),
-                F.lit(1).alias("dead"),
-            )
-        )
-    per_dir = {
-        r["d"]: (r["rows"], r["dead"])
-        for r in counted.groupBy("d")
-        .agg(F.sum("rows").alias("rows"), F.sum("dead").alias("dead"))
-        .collect()
-    }
-    rows_before = {d: per_dir.get(d, (0, 0))[0] for d in flagged}
-    live = {d: rows_before[d] - per_dir.get(d, (0, 0))[1] for d in flagged}
-    # vectors may go only if none of their rows names a kept head dir
-    # (or a key whose dir is unreadable)
+    rows, dead = counts = _count_dirs(spark, base_dir, head, flagged)
     kept = (set(head["data_dirs"]) - set(flagged)) | {""}
-    clear_vectors = not any(per_dir.get(d, (0, 0))[1] for d in kept)
-    if (
-        len(flagged) == 1
-        and len(sizes[flagged[0]]) == 1
-        and live[flagged[0]] == rows_before[flagged[0]]
-        and not clear_vectors
-    ):
+    if lone and not dead[flagged[0]] and any(dead[d] for d in kept):
         # a lone one-file dir no vector names, on a table whose vectors
         # must stay for a kept dir: the rewrite would change nothing
         return _compaction_report(spark, [])
-
-    new_rel = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-    dst = os.path.join(base_dir, new_rel)
-    n_files = max(
-        1,
-        math.ceil(sum(map(sum, sizes.values())) / (target_mb << 20)),
+    version, files_after = _rewrite_dirs(
+        spark,
+        base_dir,
+        head,
+        flagged,
+        _files_for(sum(map(sum, sizes.values())), target_mb),
+        "compact",
+        counts,
     )
-    written = _write_counted(
-        _read_manifest_data(
-            spark, base_dir, dict(head, data_dirs=flagged)
-        ).coalesce(n_files),
-        dst,
-        fmt,
-    )
-    files_after = len(
-        [n for n in os.listdir(dst) if n.endswith("." + fmt)]
-    )
-
-    version = None
-    if written == sum(live.values()):
-        fset = set(flagged)
-
-        def _dirs(head_dirs):
-            if not fset <= set(head_dirs):
-                raise _Superseded()
-            out = [d for d in head_dirs if d not in fset or d == flagged[0]]
-            if written or len(out) == 1:
-                return [new_rel if d == flagged[0] else d for d in out]
-            return [d for d in out if d != flagged[0]]  # no 0-row dir
-
-        def _dels(dels, rows):
-            # a delete_where that commits MID-compaction may target a
-            # flagged dir the rewrite didn't apply it to — carrying it
-            # against the new dir would silently resurrect those rows
-            # (review r9); fail loudly, the whole maintenance pass is
-            # the correct retry unit
-            if dels != head_dels:
-                raise RuntimeError(
-                    "compact_small_dirs raced a delete_where commit; "
-                    "re-run the compaction"
-                )
-            return ([], 0) if clear_vectors else (dels, rows)
-
-        def _schema():
-            return _read_manifest(
-                base_dir, snapshot_versions(base_dir)[-1]
-            ).get("schema")
-
-        try:
-            version = _commit_manifest(
-                base_dir,
-                _dirs,
-                "compact",
-                _schema,
-                # re-read per attempt: a streaming commit that wins the
-                # race carries NEWER progress, and the retry must
-                # republish that (review r9 — the replay guard)
-                lambda: _progress(base_dir),
-                deletes_of_head=_dels,
-            )
-        except _Superseded:
-            pass
-    swapped = version is not None and not (
-        set(flagged) & set(_read_manifest(base_dir, version)["data_dirs"])
-    )
+    swapped = version is not None
     return _compaction_report(
         spark,
         [
@@ -1640,8 +1621,8 @@ def compact_small_dirs(
                 d,
                 len(sizes[d]),
                 files_after if swapped else len(sizes[d]),
-                rows_before[d],
-                live[d],
+                rows[d],
+                rows[d] - dead[d],
                 swapped,
             )
             for d in flagged

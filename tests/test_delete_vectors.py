@@ -582,3 +582,109 @@ def test_materialize_spill_is_cleaned_and_vacuumable(spark, tmp_path):
         )
     on_disk = set(os.listdir(os.path.join(base, "deletes")))
     assert on_disk <= live
+
+
+def _race_first_commit(monkeypatch, racer):
+    """Run ``racer`` (which commits) just before the next manifest
+    commit, in the gap between a writer's data write and its commit."""
+    real = snap._commit_manifest
+
+    def raced(*args, **kwargs):
+        monkeypatch.setattr(snap, "_commit_manifest", real)
+        racer()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(snap, "_commit_manifest", raced)
+
+
+def test_compact_snapshot_keeps_an_append_that_races_its_commit(
+    spark, tmp_path, monkeypatch
+):
+    """compact_snapshot swaps the dirs it rewrote, re-derived against
+    the current head: an append committed mid-compaction survives."""
+    base = _mk(spark, tmp_path, n=20)
+    extra = spark.range(100, 105).select(
+        F.col("id"),
+        (F.col("id") % 7).alias("grp"),
+        F.format_string("row%04d", F.col("id")).alias("name"),
+    )
+    _race_first_commit(
+        monkeypatch, lambda: write_snapshot(extra, base, mode="append")
+    )
+    v = compact_snapshot(spark, base)
+    got = sorted(r["id"] for r in read_snapshot(spark, base).collect())
+    assert got == list(range(20)) + list(range(100, 105))
+    assert snap._read_manifest(base, v)["mode"] == "compact"
+
+
+def test_compact_snapshot_raced_by_delete_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A delete_where committing mid-compaction names rows the rewrite
+    kept: compact_snapshot raises and commits nothing, so the deleted
+    rows stay deleted."""
+    base = _mk(spark, tmp_path, n=20)
+    _race_first_commit(
+        monkeypatch, lambda: delete_where(spark, base, "id < 5")
+    )
+    with pytest.raises(RuntimeError, match="raced a delete_where"):
+        compact_snapshot(spark, base)
+    head = snap._read_manifest(base, snapshot_versions(base)[-1])
+    assert head["mode"] == "delete"
+    got = sorted(r["id"] for r in read_snapshot(spark, base).collect())
+    assert got == list(range(5, 20))
+
+
+def test_compact_small_dirs_swaps_a_table_whose_vectors_repeat_pairs(
+    spark, tmp_path
+):
+    """Legacy tables may carry one dead (file, pos) pair in two vector
+    dirs; the compaction guard counts distinct pairs, so the swap
+    commits and the visible rows stay the same."""
+    base = str(tmp_path / "tbl")
+    write_snapshot(spark.range(100).select(F.col("id")), base, mode="overwrite")
+    delete_where(spark, base, "id < 30")
+    m = snap._read_manifest(base, snapshot_versions(base)[-1])
+    [del_rel] = m["delete_dirs"]
+    dup_rel = os.path.join(snap._DELETE_DIR, "duplicated0race")
+    spark.read.parquet(os.path.join(base, del_rel)).write.parquet(
+        os.path.join(base, dup_rel)
+    )
+    snap._commit_manifest(
+        base,
+        lambda dirs: dirs,
+        "delete",
+        m.get("schema"),
+        None,
+        deletes_of_head=lambda dels, rows: (dels + [dup_rel], rows + 30),
+    )
+    [r] = compact_small_dirs(
+        spark, base, small_file_bytes=1 << 20
+    ).collect()
+    assert r["swapped"] and (r["rows_before"], r["rows_after"]) == (100, 70)
+    head = snap._read_manifest(base, snapshot_versions(base)[-1])
+    assert head["mode"] == "compact" and "delete_dirs" not in head
+    got = sorted(r["id"] for r in read_snapshot(spark, base).collect())
+    assert got == list(range(30, 100))
+
+
+def test_materialize_deletes_swaps_heavy_dirs_for_one_dir(spark, tmp_path):
+    """Three heavily-deleted dirs rewrite into ONE new data dir in one
+    materialize commit, and the vectors clear."""
+    from data_engineering_etl_self_service_spark.sources.snapshots import (
+        materialize_deletes,
+    )
+
+    base = str(tmp_path / "tbl")
+    for lo in (0, 100, 200):
+        write_snapshot(spark.range(lo, lo + 100), base, mode="append")
+    before = snap._read_manifest(base, snapshot_versions(base)[-1])
+    delete_where(spark, base, "id % 100 < 40")
+    visible = sorted(r["id"] for r in read_snapshot(spark, base).collect())
+    v = materialize_deletes(spark, base, min_deleted_fraction=0.25)
+    m = snap._read_manifest(base, v)
+    assert m["mode"] == "materialize" and "delete_dirs" not in m
+    assert len(m["data_dirs"]) == 1
+    assert not set(m["data_dirs"]) & set(before["data_dirs"])
+    after = sorted(r["id"] for r in read_snapshot(spark, base).collect())
+    assert after == visible and len(after) == 180

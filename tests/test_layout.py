@@ -363,6 +363,44 @@ def test_compact_small_dirs_lost_race_republishes_newer_batch_id(
     assert got == list(range(50)) + list(range(100, 110))
 
 
+def test_materialize_deletes_lost_race_republishes_newer_batch_id(
+    spark, tmp_path, monkeypatch
+):
+    """A materialize commit that loses the manifest race to a streaming
+    commit re-reads consumer progress on the retry: it republishes the
+    winner's newer batch_id, and the raced append's rows survive."""
+    from data_engineering_etl_self_service_spark.sources import snapshots
+
+    base = str(tmp_path / "snap")
+    snapshots.write_snapshot(
+        spark.range(50).repartition(8), base, meta={"batch_id": 41}
+    )
+    snapshots.delete_where(spark, base, "id < 10")
+    sink = snapshots.snapshot_batch_sink(base)
+
+    real_link = snapshots.os.link
+    state = {"raced": False}
+
+    def racing_link(src, dst):
+        if not state["raced"]:
+            state["raced"] = True
+            sink(spark.range(100, 110), 42)  # wins the race mid-commit
+            raise FileExistsError(dst)
+        return real_link(src, dst)
+
+    monkeypatch.setattr(snapshots.os, "link", racing_link)
+    v = snapshots.materialize_deletes(spark, base, min_deleted_fraction=0.1)
+    monkeypatch.setattr(snapshots.os, "link", real_link)
+    head = snapshots._read_manifest(base, v)
+    assert head["mode"] == "materialize" and "delete_dirs" not in head
+    assert head["batch_id"] == 42  # the WINNER's watermark, not 41
+    assert snapshots.last_committed_batch(base) == 42
+    got = sorted(
+        r["id"] for r in snapshots.read_snapshot(spark, base).collect()
+    )
+    assert got == list(range(10, 50)) + list(range(100, 110))
+
+
 def test_compact_small_dirs_raced_overwrite_reports_not_swapped(
     spark, tmp_path, monkeypatch
 ):
